@@ -16,8 +16,11 @@ Portability rules used throughout (keep when editing):
 
 from __future__ import annotations
 
+import contextlib
 import os
-from collections.abc import Callable
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -31,24 +34,48 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _scratch(prefix: str) -> str:
-    """Scratch dir for an engine-drive row's snapshot table: tmpfs when
-    the host has one, the default tmp dir otherwise. This box's /tmp sits
-    on the single virtio disk whose bandwidth already caps multi-core
-    shuffle (see session._local_dir — shuffle moved to tmpfs for the same
-    reason); the frozen bench harness stages its OWN replay tables on
-    /dev/shm (bench.py `bench_table_`/`bench_cdc_` sites), so this only
-    brings the per-query tables under the same policy. Measured r7
-    (sf1sim, alternating A/B in one process, healthy ~50M-md5 window,
-    3 rounds each way): cdc_bootstrap 2.0-2.7 s on /tmp vs 1.5-2.1 s on
-    tmpfs, cdc_final_state_bucketed 3.9-13.4 vs 3.6-5.1 — tmpfs won all
-    six paired rounds. On a cluster this maps to node-local NVMe scratch,
-    exactly like the shuffle dirs. Results are location-independent;
-    nothing is reused across runs (fresh mkdtemp per invocation)."""
-    import tempfile
+#: a scratch base with less free space than this is passed over for the
+#: default tmp dir (a container's /dev/shm is often only 64 MB)
+_SCRATCH_MIN_FREE_BYTES = 1 << 30
 
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+
+def _scratch_base() -> str | None:
+    """Where engine-drive rows stage their snapshot tables: the first of
+    ``SPARK_LOCAL_DIRS`` when set (the node-local scratch Spark itself
+    uses), else tmpfs; ``None`` (the default tmp dir) when that base is
+    not a writable dir with at least ``_SCRATCH_MIN_FREE_BYTES`` free.
+    Tmpfs over a disk-backed /tmp mirrors session._local_dir's shuffle
+    placement and bench.py's own replay tables; measured at sf1sim
+    (alternating A/B in one process, 3 rounds each way): cdc_bootstrap
+    2.0-2.7 s on a disk /tmp vs 1.5-2.1 s on tmpfs,
+    cdc_final_state_bucketed 3.9-13.4 vs 3.6-5.1 s — tmpfs won all six
+    paired rounds. On a cluster this maps to node-local NVMe scratch,
+    exactly like the shuffle dirs."""
+    local = os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0].strip()
+    base = local or "/dev/shm"
+    try:
+        if local:
+            os.makedirs(local, exist_ok=True)
+        st = os.statvfs(base)
+    except OSError:
+        return None
+    if not os.access(base, os.W_OK) or st.f_bavail * st.f_frsize < _SCRATCH_MIN_FREE_BYTES:
+        return None
+    return base
+
+
+@contextlib.contextmanager
+def _scratch(prefix: str) -> Iterator[str]:
+    """A fresh scratch dir for an engine-drive row's snapshot table
+    (under :func:`_scratch_base`), removed when the block exits —
+    including when the row raises, so failed invocations in a
+    long-lived process cannot pile up tables in RAM-backed tmpfs.
+    Results are location-independent; nothing is reused across runs."""
+    d = tempfile.mkdtemp(prefix=prefix, dir=_scratch_base())
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def _max_event_id(spark: SparkSession, sf_dir: str) -> int:
@@ -177,27 +204,24 @@ def q_cdc_final_state_mor(spark, sf):
     resolution, tombstone filtering, and the offset fence. The oracle
     recomputes the converged state relationally, so a hash match proves
     the multi-commit engine produced exactly the single-query answer."""
-    import shutil
-
     from kafka_plugins_spark.lake import ParquetSnapshotTable
     from kafka_plugins_spark.operators.resolve import last_writer_wins
 
     ev = _t(spark, sf, "events")
     ce = _events_ce(ev)
     hi = _max_event_id(spark, sf)
-    scratch = _scratch("mor_entry_")
-    table = ParquetSnapshotTable(spark, scratch, mode="mor")
-    step = hi // 4 + 1
-    for i in range(4):
-        chunk = ce.filter(
-            (F.col("offset") >= i * step) & (F.col("offset") < (i + 1) * step)
-        )
-        table.merge_into(last_writer_wins(chunk), batch_id=i)
-    # Materialize into the block manager (eager localCheckpoint cuts the
-    # lineage back to the scratch files), then remove the scratch table so
-    # repeated driver/bench invocations don't accrete copies in /tmp.
-    out = table.read().localCheckpoint(eager=True)
-    shutil.rmtree(scratch, ignore_errors=True)
+    with _scratch("mor_entry_") as scratch:
+        table = ParquetSnapshotTable(spark, scratch, mode="mor")
+        step = hi // 4 + 1
+        for i in range(4):
+            chunk = ce.filter(
+                (F.col("offset") >= i * step) & (F.col("offset") < (i + 1) * step)
+            )
+            table.merge_into(last_writer_wins(chunk), batch_id=i)
+        # Materialize into the block manager (eager localCheckpoint cuts
+        # the lineage back to the scratch files) before the scratch table
+        # is removed, so repeated invocations don't accrete copies.
+        out = table.read().localCheckpoint(eager=True)
     return out
 
 
@@ -212,24 +236,21 @@ def q_cdc_final_state_bucketed(spark, sf):
     answer. This is the file-pruned MERGE shape (Iceberg bucket
     partition transform) the 100 TB story rides on: a trickle batch
     rewrites only the buckets it touches."""
-    import shutil
-
     from kafka_plugins_spark.lake import ParquetSnapshotTable
     from kafka_plugins_spark.operators.resolve import last_writer_wins
 
     ev = _t(spark, sf, "events")
     ce = _events_ce(ev)
     hi = _max_event_id(spark, sf)
-    scratch = _scratch("bucketed_entry_")
-    table = ParquetSnapshotTable(spark, scratch, mode="bucketed", n_buckets=16)
-    step = hi // 4 + 1
-    for i in range(4):
-        chunk = ce.filter(
-            (F.col("offset") >= i * step) & (F.col("offset") < (i + 1) * step)
-        )
-        table.merge_into(last_writer_wins(chunk), batch_id=i)
-    out = table.read().localCheckpoint(eager=True)
-    shutil.rmtree(scratch, ignore_errors=True)
+    with _scratch("bucketed_entry_") as scratch:
+        table = ParquetSnapshotTable(spark, scratch, mode="bucketed", n_buckets=16)
+        step = hi // 4 + 1
+        for i in range(4):
+            chunk = ce.filter(
+                (F.col("offset") >= i * step) & (F.col("offset") < (i + 1) * step)
+            )
+            table.merge_into(last_writer_wins(chunk), batch_id=i)
+        out = table.read().localCheckpoint(eager=True)
     return out
 
 
@@ -259,24 +280,21 @@ def q_cdc_changelog(spark, sf):
 
 
 def _changelog_query(spark, sf, mode, prefix):
-    import shutil
-
     from kafka_plugins_spark.lake import ParquetSnapshotTable
     from kafka_plugins_spark.operators.resolve import last_writer_wins
 
     ev = _t(spark, sf, "events")
     ce = _events_ce(ev)
     cut = _max_event_id(spark, sf) // 2
-    scratch = _scratch(prefix)
-    table = ParquetSnapshotTable(spark, scratch, mode=mode)
-    r1 = table.merge_into(last_writer_wins(ce.filter(F.col("offset") < cut)), batch_id=0)
-    r2 = table.merge_into(last_writer_wins(ce.filter(F.col("offset") >= cut)), batch_id=1)
-    out = (
-        table.changes_between(r1.snapshot_id, r2.snapshot_id)
-        .withColumnRenamed("_change_type", "change_type")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(scratch, ignore_errors=True)
+    with _scratch(prefix) as scratch:
+        table = ParquetSnapshotTable(spark, scratch, mode=mode)
+        r1 = table.merge_into(last_writer_wins(ce.filter(F.col("offset") < cut)), batch_id=0)
+        r2 = table.merge_into(last_writer_wins(ce.filter(F.col("offset") >= cut)), batch_id=1)
+        out = (
+            table.changes_between(r1.snapshot_id, r2.snapshot_id)
+            .withColumnRenamed("_change_type", "change_type")
+            .localCheckpoint(eager=True)
+        )
     return out
 
 
@@ -292,8 +310,6 @@ def q_cdc_incremental_agg(spark, sf):
     from-scratch answer, including groups that appear, drop to zero, or
     migrate rows via update pairs. (The reference's consumers re-scan
     the sink and re-aggregate; this is the maintained-state upgrade.)"""
-    import shutil
-
     from kafka_plugins_spark.lake import ParquetSnapshotTable
     from kafka_plugins_spark.operators.incremental import (
         apply_count_sum_delta,
@@ -304,19 +320,18 @@ def q_cdc_incremental_agg(spark, sf):
     ev = _t(spark, sf, "events")
     ce = _events_ce(ev)
     cut = _max_event_id(spark, sf) // 2
-    scratch = _scratch("incagg_entry_")
-    table = ParquetSnapshotTable(spark, scratch, mode="mor")
-    r1 = table.merge_into(last_writer_wins(ce.filter(F.col("offset") < cut)), batch_id=0)
-    r2 = table.merge_into(last_writer_wins(ce.filter(F.col("offset") >= cut)), batch_id=1)
-    with_len = lambda df: df.withColumn("text_len", F.length("text"))
-    prior = count_sum_aggregate(with_len(table.read(r1.snapshot_id)), ["role"], ["text_len"])
-    ch = with_len(table.changes_between(r1.snapshot_id, r2.snapshot_id))
-    out = (
-        apply_count_sum_delta(ch, prior, ["role"], ["text_len"])
-        .select("role", "cnt", "sum_text_len")  # nn_* is MV bookkeeping
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(scratch, ignore_errors=True)
+    with _scratch("incagg_entry_") as scratch:
+        table = ParquetSnapshotTable(spark, scratch, mode="mor")
+        r1 = table.merge_into(last_writer_wins(ce.filter(F.col("offset") < cut)), batch_id=0)
+        r2 = table.merge_into(last_writer_wins(ce.filter(F.col("offset") >= cut)), batch_id=1)
+        with_len = lambda df: df.withColumn("text_len", F.length("text"))
+        prior = count_sum_aggregate(with_len(table.read(r1.snapshot_id)), ["role"], ["text_len"])
+        ch = with_len(table.changes_between(r1.snapshot_id, r2.snapshot_id))
+        out = (
+            apply_count_sum_delta(ch, prior, ["role"], ["text_len"])
+            .select("role", "cnt", "sum_text_len")  # nn_* is MV bookkeeping
+            .localCheckpoint(eager=True)
+        )
     return out
 
 
@@ -336,8 +351,6 @@ def q_cdc_incremental_minmax(spark, sf):
     oracle re-aggregates the converged state from scratch and never sees
     the cuts, so a hash match proves bootstrap→advance→advance on disk
     == full recompute."""
-    import shutil
-
     from kafka_plugins_spark.lake import ParquetSnapshotTable
     from kafka_plugins_spark.operators.incremental import MaintainedGroupAgg
     from kafka_plugins_spark.operators.resolve import last_writer_wins
@@ -355,18 +368,17 @@ def q_cdc_incremental_minmax(spark, sf):
 
     hi = _max_event_id(spark, sf)
     step = hi // 3 + 1
-    scratch = _scratch("incmm_entry_")
-    table = ParquetSnapshotTable(spark, os.path.join(scratch, "t"), mode="mor")
-    mv = MaintainedGroupAgg(table, os.path.join(scratch, "mv"), ["role"], agg_fn)
-    for i in range(3):
-        chunk = ce.filter(
-            (F.col("offset") >= i * step) & (F.col("offset") < (i + 1) * step)
-        )
-        table.merge_into(last_writer_wins(chunk), batch_id=i)
-        info = mv.advance()
-        assert info["bootstrapped" if i == 0 else "delta_applied"]
-    out = mv.read().localCheckpoint(eager=True)
-    shutil.rmtree(scratch, ignore_errors=True)
+    with _scratch("incmm_entry_") as scratch:
+        table = ParquetSnapshotTable(spark, os.path.join(scratch, "t"), mode="mor")
+        mv = MaintainedGroupAgg(table, os.path.join(scratch, "mv"), ["role"], agg_fn)
+        for i in range(3):
+            chunk = ce.filter(
+                (F.col("offset") >= i * step) & (F.col("offset") < (i + 1) * step)
+            )
+            table.merge_into(last_writer_wins(chunk), batch_id=i)
+            info = mv.advance()
+            assert info["bootstrapped" if i == 0 else "delta_applied"]
+        out = mv.read().localCheckpoint(eager=True)
     return out
 
 
@@ -469,8 +481,6 @@ def q_cdc_bootstrap(spark, sf):
     winner while tail events out-offset the dump's synthetic envelope.
     The oracle converges all events from scratch and never sees the
     cut, so a hash match proves dump + fenced tail == full replay."""
-    import shutil
-
     from kafka_plugins_spark.operators.resolve import final_state, last_writer_wins
     from kafka_plugins_spark.replay import bootstrap
 
@@ -479,13 +489,12 @@ def q_cdc_bootstrap(spark, sf):
     hi = _max_event_id(spark, sf)
     cut = hi // 2
     dump = final_state(ce.filter(F.col("offset") < cut))
-    scratch = _scratch("boot_entry_")
-    table, _ = bootstrap(spark, dump, scratch, {p: cut for p in range(8)})
-    table.merge_into(
-        last_writer_wins(ce), batch_id=1, ranges={p: (0, hi + 1) for p in range(8)}
-    )
-    out = table.read().localCheckpoint(eager=True)
-    shutil.rmtree(scratch, ignore_errors=True)
+    with _scratch("boot_entry_") as scratch:
+        table, _ = bootstrap(spark, dump, scratch, {p: cut for p in range(8)})
+        table.merge_into(
+            last_writer_wins(ce), batch_id=1, ranges={p: (0, hi + 1) for p in range(8)}
+        )
+        out = table.read().localCheckpoint(eager=True)
     return out
 
 
@@ -497,8 +506,6 @@ def q_cdc_wap(spark, sf):
     staged bytes the audit saw are exactly what the publish exposed
     (Iceberg's spark.wap.id flow; the reference has no staged-commit
     notion — its sink writes are immediately visible)."""
-    import shutil
-
     from kafka_plugins_spark.lake import ParquetSnapshotTable
     from kafka_plugins_spark.operators.resolve import last_writer_wins
 
@@ -506,24 +513,23 @@ def q_cdc_wap(spark, sf):
     ce = _events_ce(ev)
     hi = _max_event_id(spark, sf)
     cut = hi // 2
-    scratch = _scratch("wap_entry_")
-    table = ParquetSnapshotTable(spark, scratch)
-    table.merge_into(
-        last_writer_wins(ce.filter(F.col("offset") < cut)),
-        batch_id=0,
-        ranges={p: (0, cut) for p in range(8)},
-    )
-    head = table.current_snapshot()["snapshot_id"]
-    staged = table.stage_merge(
-        last_writer_wins(ce.filter(F.col("offset") >= cut)),
-        batch_id=1,
-        ranges={p: (cut, hi + 1) for p in range(8)},
-    )
-    assert table.current_snapshot()["snapshot_id"] == head, "stage leaked"
-    table.read_staged(staged).count()  # the audit pass
-    table.publish_staged(staged)
-    out = table.read().localCheckpoint(eager=True)
-    shutil.rmtree(scratch, ignore_errors=True)
+    with _scratch("wap_entry_") as scratch:
+        table = ParquetSnapshotTable(spark, scratch)
+        table.merge_into(
+            last_writer_wins(ce.filter(F.col("offset") < cut)),
+            batch_id=0,
+            ranges={p: (0, cut) for p in range(8)},
+        )
+        head = table.current_snapshot()["snapshot_id"]
+        staged = table.stage_merge(
+            last_writer_wins(ce.filter(F.col("offset") >= cut)),
+            batch_id=1,
+            ranges={p: (cut, hi + 1) for p in range(8)},
+        )
+        assert table.current_snapshot()["snapshot_id"] == head, "stage leaked"
+        table.read_staged(staged).count()  # the audit pass
+        table.publish_staged(staged)
+        out = table.read().localCheckpoint(eager=True)
     return out
 
 
@@ -536,8 +542,6 @@ def q_cdc_purge(spark, sf):
     text is gone from the data files, the fence is untouched, and the
     changelog emits deletes is pinned byte-level in tests/test_purge.py;
     this row pins the resolved-state semantics against SQL.)"""
-    import shutil
-
     from kafka_plugins_spark.lake import ParquetSnapshotTable
     from kafka_plugins_spark.operators.resolve import last_writer_wins
 
@@ -551,16 +555,15 @@ def q_cdc_purge(spark, sf):
         .distinct()
         .collect()
     ]
-    scratch = _scratch("purge_entry_")
-    table = ParquetSnapshotTable(spark, scratch)
-    table.merge_into(
-        last_writer_wins(ce),
-        batch_id=0,
-        ranges={p: (0, hi + 1) for p in range(8)},
-    )
-    table.purge_keys(purged)
-    out = table.read().localCheckpoint(eager=True)
-    shutil.rmtree(scratch, ignore_errors=True)
+    with _scratch("purge_entry_") as scratch:
+        table = ParquetSnapshotTable(spark, scratch)
+        table.merge_into(
+            last_writer_wins(ce),
+            batch_id=0,
+            ranges={p: (0, hi + 1) for p in range(8)},
+        )
+        table.purge_keys(purged)
+        out = table.read().localCheckpoint(eager=True)
     return out
 
 

@@ -336,8 +336,10 @@ def decode_transcript_events_with_dlq(df: DataFrame) -> tuple[DataFrame, DataFra
     pipeline-configure time for config/schema validation) to per-record
     routing — the reference's own ``KafkaBatchSource.transform`` throws
     on record-level format errors, failing the batch. Both outputs are
-    lazy projections of one parse — Catalyst computes ``from_json`` once
-    per side, no Python.
+    lazy projections of one parse (:func:`parse_transcript_wire`) —
+    Catalyst computes ``from_json`` once per side, no Python; cache the
+    parsed frame and split it with :func:`split_transcript_dlq` to parse
+    once for both.
 
     In the streaming pipeline, write the DLQ side to a quarantine sink
     inside the same ``foreachBatch`` (the fence covers both: a replayed
@@ -348,6 +350,13 @@ def decode_transcript_events_with_dlq(df: DataFrame) -> tuple[DataFrame, DataFra
     ``(value, partition, offset, reason)`` with reason ∈
     {'malformed_json', 'missing_required'}.
     """
+    return split_transcript_dlq(parse_transcript_wire(df))
+
+
+def parse_transcript_wire(df: DataFrame) -> DataFrame:
+    """The one ``from_json`` parse of a wire frame: ``(_m, value,
+    partition, offset, reason)`` where ``_m`` is the payload struct and
+    ``reason`` the dead-letter tag, NULL for a good row."""
     from kafka_plugins_spark.schema import TRANSCRIPT
 
     # PERMISSIVE from_json yields a struct of NULLS for malformed input
@@ -366,24 +375,28 @@ def decode_transcript_events_with_dlq(df: DataFrame) -> tuple[DataFrame, DataFra
         payload_schema,
         {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
     )
-    tagged = df.select(parsed.alias("_m"), "value", "partition", "offset")
-    malformed = F.col("_m._corrupt").isNotNull()
     missing = (
         F.col("_m.conv_id").isNull()
         | F.col("_m.turn_idx").isNull()
         | F.col("_m.op").isNull()
     )
+    return df.select(parsed.alias("_m"), "value", "partition", "offset").withColumn(
+        "reason",
+        F.when(F.col("_m._corrupt").isNotNull(), F.lit("malformed_json")).when(
+            missing, F.lit("missing_required")
+        ),
+    )
+
+
+def split_transcript_dlq(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(good, dlq)`` projections of a :func:`parse_transcript_wire`
+    frame (see :func:`decode_transcript_events_with_dlq`)."""
     good = (
-        tagged.filter(~malformed & ~missing)
+        tagged.filter(F.col("reason").isNull())
         .select("_m.*", "partition", "offset")
         .drop("_corrupt")
     )
-    dlq = tagged.filter(malformed | missing).select(
-        "value",
-        "partition",
-        "offset",
-        F.when(malformed, F.lit("malformed_json"))
-        .otherwise(F.lit("missing_required"))
-        .alias("reason"),
+    dlq = tagged.filter(F.col("reason").isNotNull()).select(
+        "value", "partition", "offset", "reason"
     )
     return good, dlq

@@ -18,13 +18,16 @@ recommended local harness), which exercises identical plan shapes.
 
 from __future__ import annotations
 
+import os
 import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from kafka_plugins_spark.functions.decode import parse_transcript_wire, split_transcript_dlq
 from kafka_plugins_spark.lake import CommitResult, ParquetSnapshotTable, compute_ranges
 from kafka_plugins_spark.operators.resolve import DEDUP_KEY, last_writer_wins
 
@@ -43,6 +46,22 @@ class IngestStream:
         self.query.processAllAvailable()
         self.query.stop()
         self.query.awaitTermination(30)
+
+
+def _wire_ranges(parsed: DataFrame) -> tuple[dict[int, tuple[int, int]], int]:
+    """:func:`compute_ranges` of a :func:`parse_transcript_wire` frame
+    plus its dead-letter row count, in one aggregate job."""
+    rows = (
+        parsed.groupBy("partition")
+        .agg(
+            F.min("offset").alias("lo"),
+            F.max("offset").alias("hi"),
+            F.count("reason").alias("dead"),
+        )
+        .collect()
+    )
+    ranges = {int(r["partition"]): (int(r["lo"]), int(r["hi"]) + 1) for r in rows}
+    return ranges, sum(int(r["dead"]) for r in rows)
 
 
 def dedup_stream(events: DataFrame, watermark_delay: str = "1 hour") -> DataFrame:
@@ -107,13 +126,22 @@ def start_ingest_stream(
     undecodable rows go to ``dlq_path`` (one overwrite-mode subdir per
     batch id, so a replayed epoch rewrites its quarantine idempotently
     instead of duplicating it) and the batch continues with the good
-    rows. The offset fence covers the FULL batch including quarantined
-    offsets — they were processed (into the DLQ), so a replay skips them
-    while the DLQ keeps the record; requires ``dedup=False`` (stateful
-    dedup needs decoded event time) and a non-None ``dlq_path``: without
-    a quarantine sink the fence would still cover the dropped offsets,
-    making the loss permanent AND unrecorded — the same silent-data-loss
-    class as the dedup trap, so it is refused rather than defaulted.
+    rows. The payload is parsed once per batch: the cached parsed frame
+    feeds one per-partition aggregate (offset ranges plus the
+    dead-letter count), the DLQ write and the merge. A ``batch-NNNNNN``
+    subdir is written only for a batch that quarantined at least one
+    row, so a clean batch schedules no write job and leaves no empty
+    subdir. Replay stays idempotent: the checkpoint's offset log pins a
+    batch id's offsets, so a replayed epoch holds the same rows, counts
+    the same dead letters, and either rewrites the same subdir or, clean
+    again, writes none. The offset fence covers the FULL batch including
+    quarantined offsets — they were processed (into the DLQ), so a replay
+    skips them while the DLQ keeps the record; requires ``dedup=False``
+    (stateful dedup needs decoded event time) and a non-None
+    ``dlq_path``: without a quarantine sink the fence would still cover
+    the dropped offsets, making the loss permanent AND unrecorded — the
+    same silent-data-loss class as the dedup trap, so it is refused
+    rather than defaulted.
 
     DLQ idempotence is **per-checkpoint**: batch ids (and thus the
     ``batch-NNNNNN`` overwrite targets) are assigned by the streaming
@@ -180,21 +208,22 @@ def start_ingest_stream(
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
+        if wire:
+            # parse once: the ranges aggregate, the DLQ write and the
+            # merge all read the cached parsed frame
+            batch = parse_transcript_wire(batch)
         batch = batch.cache()
         try:
-            ranges = compute_ranges(batch)
+            if wire:
+                ranges, n_dead = _wire_ranges(batch)
+            else:
+                ranges = compute_ranges(batch)
             if not ranges:
                 return
             work = batch
             if wire:
-                from kafka_plugins_spark.functions.decode import (
-                    decode_transcript_events_with_dlq,
-                )
-
-                work, dlq = decode_transcript_events_with_dlq(batch)
-                if dlq_path is not None:
-                    import os
-
+                work, dlq = split_transcript_dlq(batch)
+                if n_dead:
                     dlq.write.mode("overwrite").parquet(
                         os.path.join(dlq_path, f"batch-{batch_id:06d}")
                     )

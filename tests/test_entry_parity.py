@@ -105,3 +105,29 @@ def test_every_query_has_result_rows(spark):
         if name in may_be_empty:
             continue
         assert q(spark, SF).limit(1).count() == 1, f"{name} returned no rows"
+
+
+def test_failed_engine_drive_row_leaves_no_scratch(spark, tmp_path, monkeypatch):
+    """An engine-drive row stages its table under SPARK_LOCAL_DIRS and
+    removes it even when the build raises; a base without enough free
+    space falls back to the default tmp dir."""
+    from kafka_plugins_spark import entry_queries as eq
+    from kafka_plugins_spark.lake import ParquetSnapshotTable
+
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", str(tmp_path))
+    monkeypatch.setattr(eq, "_SCRATCH_MIN_FREE_BYTES", 0)
+    assert eq._scratch_base() == str(tmp_path)
+    seen = []
+
+    def boom(self, *args, **kwargs):
+        seen.append(self.path)
+        raise RuntimeError("injected merge failure")
+
+    monkeypatch.setattr(ParquetSnapshotTable, "merge_into", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        eq.q_cdc_final_state_mor(spark, SF)
+    assert seen and seen[0].startswith(str(tmp_path))
+    assert list(tmp_path.iterdir()) == []
+
+    monkeypatch.setattr(eq, "_SCRATCH_MIN_FREE_BYTES", 1 << 62)
+    assert eq._scratch_base() is None

@@ -73,6 +73,44 @@ def test_failed_batch_does_not_advance_cursor(spark, events_path, tmp_path, monk
     assert_tables_equal(t2.read().toPandas(), duckdb_final_state(events_path))
 
 
+@pytest.mark.parametrize("compact_between", [False, True])
+def test_failed_publish_retry_keeps_lineage_exact(
+    spark, events_path, tmp_path, monkeypatch, compact_between
+):
+    """A publish that fails after the lineage file is written, then a
+    retry: read_lineage() holds exactly one row per (batch, partition)
+    that landed. With a compaction in between, the compaction takes the
+    failed publish's snapshot id and must not expose its lineage."""
+    path = str(tmp_path / "t")
+    table, _ = replay(spark, events_path, path, chunk_size=150, max_chunks=1)
+
+    def boom(self, snap_id, snapshot):
+        raise RuntimeError("injected failure before snapshot publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(ParquetSnapshotTable, "_commit", boom)
+        with pytest.raises(RuntimeError, match="injected"):
+            replay(spark, events_path, path, chunk_size=150, max_chunks=2)
+    assert table.read_lineage().filter(F.col("batch_id") == 1).count() == 0
+    if compact_between:
+        assert not table.compact().skipped
+
+    t2, _ = replay(spark, events_path, path, chunk_size=150)
+    lin = t2.read_lineage()
+    assert lin.groupBy("batch_id", "partition").count().filter("count > 1").count() == 0
+    landed = {
+        (s["batch_id"], r["partition"], r["start_offset"], r["end_offset"], r["rows"])
+        for s in t2.snapshots()
+        for r in s.get("lineage", [])
+    }
+    got = {
+        (r["batch_id"], r["partition"], r["start_offset"], r["end_offset"], r["rows"])
+        for r in lin.collect()
+    }
+    assert got == landed
+    assert_tables_equal(t2.read().toPandas(), duckdb_final_state(events_path))
+
+
 def test_partial_overlap_applies_only_suffix(spark, events_path, tmp_path):
     """A batch straddling the watermark applies only the unseen suffix."""
     path = str(tmp_path / "t")

@@ -272,6 +272,57 @@ def test_stream_mor_auto_compact_bounds_read_amplification(spark, staged, tmp_pa
     assert_tables_equal(table.read().toPandas(), duckdb_final_state(staged["oracle"]))
 
 
+def test_stream_wire_mor_batch_job_budget(spark, tmp_path):
+    """A steady MoR wire micro-batch parses its payload once, writes no
+    DLQ for a clean batch and reads its lineage stats back under the
+    stored schema: at most 7 Spark jobs (cache materialization, the
+    ranges + dead-letter-count aggregate's two stages, the LWW map
+    stage, the delta write, the stats aggregate's two stages) and no
+    ``batch-NNNNNN`` subdir. Jobs are counted by the stream's own job
+    group (its run id), so no other thread's jobs can leak in."""
+    from kafka_plugins_spark.datagen import write_wire_events
+
+    df = generate_events(spark, n_conversations=40, n_partitions=4, seed=5)
+    wire_dir = str(tmp_path / "wire")
+    write_wire_events(df, wire_dir)
+    wire = spark.read.parquet(wire_dir)
+    end = wire.agg(F.max("offset")).first()[0] + 1
+    n_files = 4
+    cuts = [end * i // n_files for i in range(n_files + 1)]
+    stage, watch = tmp_path / "stage", tmp_path / "watch"
+    watch.mkdir()
+    for i in range(n_files):
+        wire.filter(
+            (F.col("offset") >= cuts[i]) & (F.col("offset") < cuts[i + 1])
+        ).coalesce(1).write.parquet(str(stage / str(i)))
+
+    dlq_dir = tmp_path / "dlq"
+    s = start_ingest_stream(
+        spark,
+        file_event_source(spark, str(watch), wire.schema, max_files_per_trigger=1),
+        str(tmp_path / "table"), str(tmp_path / "ckpt"),
+        wire=True, dlq_path=str(dlq_dir), mode="mor", available_now=False,
+    )
+    tracker = spark.sparkContext.statusTracker()
+    jobs = []
+    try:
+        for i in range(n_files):
+            before = set(tracker.getJobIdsForGroup(str(s.query.runId)))
+            part = next((stage / str(i)).glob("part-*.parquet"))
+            os.rename(part, watch / f"wire-{i}.parquet")
+            s.query.processAllAvailable()
+            jobs.append(len(set(tracker.getJobIdsForGroup(str(s.query.runId))) - before))
+    finally:
+        s.query.stop()
+    assert len(s.commits) == n_files and not any(c.skipped for c in s.commits)
+    assert s.table.live_data_dirs() == n_files  # no compaction in the window
+    assert max(jobs[1:]) <= 7, f"jobs per micro-batch: {jobs}"
+    assert not dlq_dir.exists() or not any(dlq_dir.iterdir())
+    oracle = str(tmp_path / "oracle")
+    df.write.partitionBy("partition").parquet(oracle)
+    assert_tables_equal(s.table.read().toPandas(), duckdb_final_state(oracle))
+
+
 def test_stream_wire_dlq_quarantines_and_fences(spark, tmp_path):
     """wire=True + dlq_path: corrupted payloads land in the per-batch
     quarantine, good rows converge, the fence covers quarantined offsets
