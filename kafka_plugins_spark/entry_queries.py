@@ -1520,10 +1520,17 @@ def _bpe_encode_oracle_sql(n_merges: int = BPE_N_MERGES) -> str:
     ' l  r ' with ' lr ' (non-overlapping left-to-right — the Sennrich
     apply semantics; symbols never contain spaces so boundaries are
     unambiguous). Rounds whose best pair occurs <2 times no-op (NULL
-    pattern), matching the Spark trainer's early stop."""
+    pattern), matching the Spark trainer's early stop.
+
+    Every ``wf{t}`` is declared ``AS MATERIALIZED``: DuckDB inlines a
+    plain CTE at each reference, and ``wf{t}`` is read twice — by
+    ``pc{t}`` (through ``best{t}``) and by ``wf{t+1}`` — so the inlined
+    plan of ``wf{n}`` holds 2^n copies of the ``words``/``wf0`` pipeline.
+    Dropping ``MATERIALIZED`` brings back the out-of-memory failure at
+    ``n_merges = 10`` on 500 documents."""
     parts = [
         """we AS (SELECT unnest(w) AS word FROM words),
-        wf0 AS (
+        wf0 AS MATERIALIZED (
             SELECT word, count(*) AS freq,
                    ' ' || array_to_string(list_append(string_split(word, ''), '</w>'), '  ') || ' ' AS seq
             FROM we GROUP BY word)"""
@@ -1539,7 +1546,7 @@ def _bpe_encode_oracle_sql(n_merges: int = BPE_N_MERGES) -> str:
             SELECT CASE WHEN n >= 2 THEN ' ' || lhs || '  ' || rhs || ' ' END AS pat,
                    CASE WHEN n >= 2 THEN ' ' || lhs || rhs || ' ' END AS rep
             FROM pc{t} ORDER BY n DESC, lhs ASC, rhs ASC LIMIT 1)""")
-        parts.append(f"""wf{t + 1} AS (
+        parts.append(f"""wf{t + 1} AS MATERIALIZED (
             SELECT word, freq,
                    CASE WHEN b.pat IS NULL THEN seq ELSE replace(seq, b.pat, b.rep) END AS seq
             FROM wf{t} LEFT JOIN best{t} b ON TRUE)""")
@@ -1592,7 +1599,8 @@ def _bpe_token_ids_oracle_sql(n_merges: int = BPE_N_MERGES) -> str:
         wordtok AS (
             SELECT d.doc_id, d.pos AS wpos, string_split(v.tokstr, ' ') AS s
             FROM docw d JOIN vocab v USING (word)),
-        doctok AS (
+        -- MATERIALIZED: read by tokid and the final SELECT, and DuckDB inlines each read
+        doctok AS MATERIALIZED (
             SELECT doc_id, wpos, t.i AS tpos, s[t.i] AS token
             FROM wordtok, UNNEST(generate_series(1, len(s))) AS t(i)),
         tokid AS (

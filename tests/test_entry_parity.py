@@ -85,6 +85,20 @@ def test_query_matches_oracle(spark, duck, name):
     pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=False, rtol=0, atol=1e-9)
 
 
+@pytest.mark.parametrize("name", ["bpe_encode", "bpe_token_ids"])
+def test_bpe_oracle_fits_small_memory_limit(name):
+    """The BPE oracles re-learn BPE_N_MERGES merges in unrolled SQL; each
+    round's word-freq CTE is read twice, so unless those CTEs are
+    materialized DuckDB inlines them into a plan 2^n copies wide and
+    runs out of memory on 500 documents. Pinned under a 512 MB limit."""
+    from kafka_plugins_spark.entry_queries import ORACLES
+
+    con = duckdb.connect()
+    con.execute("SET memory_limit='512MB'")
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'")
+    assert len(con.execute(ORACLES[name]).df()) == 500
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
