@@ -2,9 +2,10 @@
 
 Two backends behind one ``merge_into`` contract:
 
-- :class:`ParquetSnapshotTable` — offline copy-on-write backend used in
-  this sandbox (no Iceberg runtime jar, no network). Every commit writes a
-  new data directory plus an atomically-renamed ``_snapshots/NNNNNN.json``
+- :class:`ParquetSnapshotTable` — plain-parquet backend (no Iceberg
+  runtime jar, no network) with three write modes: copy-on-write,
+  merge-on-read and hash-bucketed. Every commit writes new data
+  directories plus an atomically-renamed ``_snapshots/NNNNNN.json``
   carrying ``{batch_id, per-partition offset watermarks, lineage, schema}``.
   This generalizes the reference's offsets file
   (``KafkaPartitionOffsets.java:69-95``, saved post-hoc and non-atomically
@@ -259,20 +260,115 @@ def _align_select(df: DataFrame, stored_schema: T.StructType) -> DataFrame:
     )
 
 
-def _fresh_partition_stats(fresh: DataFrame) -> dict[int, tuple[int, int, int]]:
-    """partition → (min offset, max offset + 1, rows) of a winners batch
-    (pre-rename envelope columns). One aggregate job; shared by the
-    incremental-CoW and bucketed merge heads."""
-    return {
-        int(r["partition"]): (int(r["lo"]), int(r["hi"]) + 1, int(r["n"]))
-        for r in fresh.groupBy("partition")
-        .agg(
-            F.min("offset").alias("lo"),
-            F.max("offset").alias("hi"),
-            F.count("*").alias("n"),
+#: envelope column → stored system column (and back)
+_TO_STORED = {"op": "_op", "partition": "_partition", "offset": "_offset"}
+_TO_ENVELOPE = {v: k for k, v in _TO_STORED.items()}
+
+
+def _bucket_col(n: int) -> Column:
+    """Bucket of a row: ``pmod(xxhash64(conv_id), n)``. Buckets hash
+    ``conv_id`` alone, not the full key: a conversation's turns
+    co-locate, so a per-bucket merge never crosses dirs, and the
+    assignment matches the conv_id salting the streaming path uses for
+    hot-conversation skew. xxhash64 is a fixed published algorithm (seed
+    42 in Spark), so assignments are stable across sessions and
+    versions."""
+    return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n)).cast("int")
+
+
+def _partition_stats(
+    df: DataFrame, prefix: str = "", n_buckets: int | None = None
+) -> tuple[dict[int, tuple[int, int, int]], list[int]]:
+    """partition → (min offset, max offset + 1, rows) of a batch, in ONE
+    aggregate job. ``prefix="_"`` reads stored system columns instead of
+    the envelope. With ``n_buckets`` the same aggregate also returns the
+    batch's bucket set, a NULL conv_id encoded as -1 (``collect_set``
+    drops NULLs) — one job where a separate distinct + collect over the
+    bucket ids would be a second round-trip on every bucketed commit."""
+    aggs = [
+        F.min(f"{prefix}offset").alias("lo"),
+        F.max(f"{prefix}offset").alias("hi"),
+        F.count("*").alias("n"),
+    ]
+    if n_buckets is not None:
+        aggs.append(
+            F.collect_set(
+                F.when(F.col("conv_id").isNull(), F.lit(-1)).otherwise(_bucket_col(n_buckets))
+            ).alias("bs")
         )
-        .collect()
+    rows = df.groupBy(f"{prefix}partition").agg(*aggs).collect()
+    per_part = {
+        int(r[f"{prefix}partition"]): (int(r["lo"]), int(r["hi"]) + 1, int(r["n"]))
+        for r in rows
     }
+    buckets = sorted({int(b) for r in rows for b in r["bs"]}) if n_buckets is not None else []
+    return per_part, buckets
+
+
+def _write_buckets(
+    rows: DataFrame,
+    data_path: str,
+    n: int,
+    buckets: list[int] | None = None,
+    manifest: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """Hash-bucket ``rows`` into ``data_path/_bucket=b`` dirs and
+    return the new manifest: ``manifest`` with the ``buckets``
+    entries replaced (dropped when a bucket came out empty — it held
+    only tombstones or purged keys), or with ``buckets=None`` (a
+    whole-table write) exactly the dirs written."""
+    # the WRITE-side NULL-key guard: covers rows a batch check never
+    # sees — stored NULL-key rows folded in by a cow/mor→bucketed
+    # conversion. Zero extra scans: the error raises inside the write
+    # job itself, aborting the commit before any snapshot is published.
+    bucket_of = F.when(
+        F.col("conv_id").isNull(),
+        F.raise_error(
+            F.lit(
+                "bucketed table contract: NULL conv_id row encountered "
+                "while writing buckets (stored rows folded in by a "
+                "cow/mor conversion?) — xxhash64(NULL) degenerates to "
+                "the seed and would silently misfile the row; repair "
+                "or delete null-key rows before converting"
+            )
+        ).cast("int"),
+    ).otherwise(_bucket_col(n))
+    # repartition by _bucket BEFORE partitionBy: without it every
+    # shuffle task writes one file into every bucket dir it holds
+    # rows for (tasks × buckets small files — measured 6× size bloat
+    # from parquet per-file overhead at bench scale). With it each
+    # bucket is one task's contiguous write. Write parallelism =
+    # written buckets; size n_buckets so a bucket is a few GB and that
+    # is exactly the parallelism you want. sortWithinPartitions after
+    # the bucket repartition: rows land in the parquet files ordered
+    # by key, so row-group min/max stats on conv_id are tight —
+    # read_key and future merges prune row groups inside the bucket,
+    # not just the bucket dir. Task-local sort, no extra exchange.
+    (
+        rows.withColumn("_bucket", bucket_of)
+        .repartition(n if buckets is None else max(len(buckets), 1), F.col("_bucket"))
+        .sortWithinPartitions("_bucket", *KEY_COLUMNS)
+        .write.mode("overwrite")
+        .partitionBy("_bucket")
+        .parquet(data_path)
+    )
+    if buckets is None:
+        # int() raises on a non-integer dir name: a manifest key like
+        # __HIVE_DEFAULT_PARTITION__ would crash every later
+        # _snapshot_paths read far from the cause
+        return {
+            str(int(name[len("_bucket="):])): os.path.join(data_path, name)
+            for name in sorted(os.listdir(data_path))
+            if name.startswith("_bucket=")
+        }
+    out = dict(manifest)
+    for b in buckets:
+        bdir = os.path.join(data_path, f"_bucket={b}")
+        if os.path.isdir(bdir):
+            out[str(b)] = bdir
+        else:
+            out.pop(str(b), None)
+    return out
 
 
 def _compose_patch(
@@ -341,11 +437,52 @@ def _compose_patch(
     new_rows = (
         batch.filter(F.col("op") != "U")  # orphan patches never insert
         .join(stored.select(*KEY_COLUMNS), KEY_COLUMNS, "left_anti")
-        .withColumnsRenamed(
-            {"op": "_op", "partition": "_partition", "offset": "_offset"}
-        )
+        .withColumnsRenamed(_TO_STORED)
     )
     return patched_stored, new_rows
+
+
+def _resolve(
+    prior: DataFrame | None,
+    fresh: DataFrame,
+    new_schema: T.StructType,
+    in_order: bool,
+    sets_col: str | None = None,
+) -> DataFrame:
+    """Stored rows after applying the fenced batch ``fresh`` (envelope
+    columns, plus ``sets_col`` for a patch batch) to ``prior``, the
+    stored rows the commit rewrites (None: a pure write), aligned to
+    ``new_schema`` plus system columns.
+
+    Rows are stored WITH system columns (_op/_partition/_offset) and
+    tombstones are RETAINED (read() hides them): that is what lets a
+    later out-of-order batch resolve against stored state, and what
+    keeps a lower-offset re-insert from resurrecting a deleted key.
+    compact() drops tombstones once safe."""
+    stored = _with_system_columns(new_schema)
+    rows = _align_select(fresh.withColumnsRenamed(_TO_STORED), stored)
+    if prior is None:
+        # a patch with nothing stored: only inserts and tombstones land
+        return rows if sets_col is None else rows.filter(F.col("_op") != "U")
+    prior = _align_select(prior, stored)
+    if sets_col is not None:
+        value_cols = [f.name for f in new_schema.fields if f.name not in KEY_COLUMNS]
+        patched, inserts = _compose_patch(prior, fresh, value_cols, sets_col)
+        return _align_select(patched, stored).unionByName(_align_select(inserts, stored))
+    if in_order:
+        # fast path (the Kafka case): every batch winner is strictly
+        # newer than any stored row of its key — drop changed keys,
+        # append batch winners. No broadcast hint: AQE sees the key-set
+        # size at runtime and picks broadcast for micro-batches, shuffle
+        # for backfills.
+        return prior.join(rows.select(*KEY_COLUMNS), KEY_COLUMNS, "left_anti").unionByName(rows)
+    # out-of-order batch: re-resolve LWW over stored rows ∪ batch
+    # winners — max offset per key wins regardless of arrival order
+    # (offsets of a key live in one partition)
+    from kafka_plugins_spark.operators.resolve import last_writer_wins
+
+    combined = prior.unionByName(rows).withColumnsRenamed(_TO_ENVELOPE)
+    return _align_select(last_writer_wins(combined).withColumnsRenamed(_TO_STORED), stored)
 
 
 _BUCKET_CACHE: dict[tuple[str, int], int] = {}
@@ -460,7 +597,7 @@ def compute_ranges(events: DataFrame) -> dict[int, tuple[int, int]]:
 
 
 class ParquetSnapshotTable:
-    """Snapshot table over plain parquet (sandbox backend), two write modes:
+    """Snapshot table over plain parquet, three write modes:
 
     - ``mode="cow"`` (copy-on-write, default): every commit rewrites the
       table — reads are a plain scan, writes are O(table). Right for
@@ -471,12 +608,25 @@ class ParquetSnapshotTable:
       folds them. Right for the realistic CDC shape: a long stream of
       small commits where CoW's per-commit rewrite is the scale killer
       (N commits cost O(N·table) writes vs O(events) + one compact).
-      This mirrors Iceberg's MoR position-delete/equality-delete design;
-      the fence/lineage/schema-evolution contracts are IDENTICAL in both
-      modes (property-tested side by side).
+      This mirrors Iceberg's MoR position-delete/equality-delete design.
+    - ``mode="bucketed"`` (hash-bucketed copy-on-write): stored rows are
+      split into ``n_buckets`` dirs by :func:`_bucket_col`; a commit
+      reads and rewrites ONLY the buckets containing a batch key, and
+      the snapshot manifest (``bucket_paths``) carries untouched buckets
+      forward by reference. The middle point of the write-amplification
+      triangle: it writes O(touched buckets) and reads clean with NO
+      window resolve (bucket dirs are key-disjoint and internally
+      resolved). At 100 TB with ``n_buckets`` sized so one bucket ≈ a
+      few GB, a trickle batch touching 1% of conversations rewrites ~1%
+      of the table — the file-pruned MERGE shape Iceberg gets from
+      bucket partition transforms. ``n_buckets`` is pinned in the
+      snapshot and a conflicting reopen raises.
 
-    ``mode=None`` follows what the table on disk already is (an existing
-    MoR table keeps appending deltas; a fresh table defaults to CoW).
+    The fence/lineage/schema-evolution contracts are IDENTICAL in every
+    mode (property-tested side by side): all three commit through one
+    pipeline, :meth:`_commit_batch`. ``mode=None`` follows what the
+    table on disk already is (an existing MoR table keeps appending
+    deltas; a fresh table defaults to CoW).
     """
 
     def __init__(
@@ -776,7 +926,7 @@ class ParquetSnapshotTable:
             base = self.read(snapshot_id)
         return base.filter(F.col("conv_id") == conv_id)
 
-    def _read_full(self, snap: dict | None = None) -> DataFrame:
+    def _read_full(self, snap: dict | None = None, buckets: list[int] | None = None) -> DataFrame:
         """Stored rows incl. tombstones + system columns (merge input).
 
         MoR: a key's live row is the max-``_offset`` row across all delta
@@ -789,9 +939,18 @@ class ParquetSnapshotTable:
         CURRENT merged schema (explicit read schema ⇒ columns added
         later surface as nulls — reader-side evolution). A single dir
         (fresh load, post-compact, CoW) skips the window entirely.
+
+        ``buckets`` restricts a bucketed snapshot to those buckets' dirs
+        (bucket ids absent from its manifest hold no rows).
         """
         if snap is None:
             snap = self.current_snapshot()
+        if buckets is not None:
+            manifest = snap["bucket_paths"]
+            snap = {
+                **snap,
+                "bucket_paths": {str(b): manifest[str(b)] for b in buckets if str(b) in manifest},
+            }
         stored = _with_system_columns(self._schema_of(snap))
         paths = self._snapshot_paths(snap)
         if not paths:
@@ -966,179 +1125,10 @@ class ParquetSnapshotTable:
         here, which makes any replay (full or partial overlap) idempotent
         even under out-of-order batch delivery. Fencing post-reduce is
         sound because a committed interval means the table already
-        reflects *every* event inside it.
+        reflects *every* event inside it. ``ranges`` that are None or
+        empty are computed from the batch.
         """
-        t0 = time.monotonic()
-        owned_persist = None
-        if ranges is None:
-            # compute_ranges is a full evaluation of the winners pipeline
-            # (scan + LWW shuffle); without a persist the downstream merge
-            # head evaluates the SAME pipeline a second time (measured:
-            # ~2× the resolve cost on every engine-drive commit that
-            # passes no ranges). Persist FIRST so the ranges job doubles
-            # as the cache materialization every later pass reads.
-            # Callers that pass ranges (the replay/streaming paths, which
-            # plan ranges from footer metadata) are unaffected — no
-            # persist is introduced for the big single-pass backfills.
-            # Only claim ownership when the caller has NOT persisted the
-            # frame: unpersisting a caller-owned cache would silently
-            # destroy it (review finding).
-            if winners.storageLevel == StorageLevel.NONE:
-                winners = winners.persist(StorageLevel.MEMORY_AND_DISK)
-                owned_persist = winners
-            ranges = compute_ranges(winners)
-        try:
-            return self._merge_into_fenced(winners, batch_id, ranges, t0)
-        finally:
-            if owned_persist is not None:
-                owned_persist.unpersist()
-
-    def _merge_into_fenced(
-        self,
-        winners: DataFrame,
-        batch_id: int,
-        ranges: dict[int, tuple[int, int]],
-        t0: float,
-    ) -> CommitResult:
-        delivered = self.delivered_ranges()
-        if ranges:
-            decision = fence_decision(ranges, delivered)
-            if decision.skip:
-                return CommitResult(skipped=True, wall_ms=int((time.monotonic() - t0) * 1000))
-            needs_filter = decision.needs_filter
-        else:
-            needs_filter = bool(delivered)
-
-        fresh = winners
-        if needs_filter:
-            fresh = _drop_delivered(winners, delivered)
-        snap_before = self.current_snapshot()
-        if self._write_mode() == "bucketed":
-            return self._merge_bucketed(fresh, batch_id, ranges, delivered, snap_before, t0)
-        # Initial load with known ranges — and EVERY MoR commit — runs
-        # SINGLE-PASS over the input: the winner set is computed exactly
-        # once straight into the write (no persist materialization);
-        # per-partition lineage stats come from a post-write
-        # column-pruned scan of the 2 system columns of the just-written
-        # dir — measured CHEAPER (0.3-1 s, codegen'd, parallel) than
-        # riding an Observation on the write (96 interpreted per-row
-        # aggregate expressions cost 2-3.7 s on an 8-core 3.1M-event
-        # load) and it scales with the cluster instead of with row count
-        # × partitions. Re-measured at local[4] on a 3M-row write: the
-        # Observation took 3.36 s at 8 Kafka partitions and 4.16 s at 32,
-        # the read-back scan 2.87 s and 2.63 s. The Observation does save
-        # two of a small MoR micro-batch's jobs (streaming freshness 0.75×
-        # in an in-process A/B), but its cost grows with the partition
-        # count, so the scan stays. The scan reads under the stored schema: without one,
-        # Spark schedules a footer schema-inference job per commit.
-        # Incremental CoW merges reference `fresh` twice
-        # (upserts + changed keys), so they persist it; serialized level
-        # because a big backfill's winner set can exceed what
-        # deserialized on-heap caching tolerates alongside running tasks
-        # (observed OOM at 8.6M wide rows / 16g heap).
-        mor = self._write_mode() == "mor"
-        single_pass = mor or (snap_before is None and bool(ranges))
-        if not single_pass:
-            fresh = fresh.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            per_part: dict[int, tuple[int, int, int]] | None = None
-            if not single_pass:
-                per_part = _fresh_partition_stats(fresh)
-                if not per_part:
-                    return CommitResult(skipped=True, wall_ms=int((time.monotonic() - t0) * 1000))
-                per_part = self._clip_ranges(per_part, ranges, delivered)
-
-            incoming_payload = T.StructType(
-                [f for f in fresh.schema.fields if f.name not in ENVELOPE_COLUMNS]
-            )
-            new_schema = merge_schemas(self.table_schema(), incoming_payload)
-            payload_cols = [f.name for f in new_schema.fields]
-
-            # Rows are stored WITH system columns (_op/_partition/_offset)
-            # and tombstones are RETAINED (read() hides them): that is what
-            # lets a later out-of-order batch resolve against stored state,
-            # and what keeps a lower-offset re-insert from resurrecting a
-            # deleted key. compact() drops tombstones once safe.
-            batch_rows = fresh.withColumnsRenamed(
-                {"op": "_op", "partition": "_partition", "offset": "_offset"}
-            )
-
-            if snap_before is None or mor:
-                # initial load: nothing to merge against — pure write.
-                # MoR: ALWAYS a pure write of the batch winners as one
-                # delta dir (O(batch)); cross-commit LWW happens at read
-                # (max _offset per key), which also covers the
-                # out-of-order case with no special path.
-                merged = batch_rows
-            else:
-                in_order = _batch_in_order(ranges, delivered)
-                table_full = self._read_full()
-                if in_order:
-                    # fast path (the Kafka case): every batch winner is
-                    # strictly newer than any stored row of its key — drop
-                    # changed keys, append batch winners. No broadcast
-                    # hint: AQE sees the key-set size at runtime and picks
-                    # broadcast for micro-batches, shuffle for backfills.
-                    changed_keys = batch_rows.select(*KEY_COLUMNS)
-                    merged = table_full.join(
-                        changed_keys, KEY_COLUMNS, "left_anti"
-                    ).unionByName(batch_rows, allowMissingColumns=True)
-                else:
-                    # out-of-order batch: re-resolve LWW over stored rows ∪
-                    # batch winners — max offset per key wins regardless of
-                    # arrival order (offsets of a key live in one partition)
-                    from kafka_plugins_spark.operators.resolve import last_writer_wins
-
-                    combined = table_full.withColumnsRenamed(
-                        {"_op": "op", "_partition": "partition", "_offset": "offset"}
-                    ).unionByName(fresh, allowMissingColumns=True)
-                    merged = last_writer_wins(combined).withColumnsRenamed(
-                        {"op": "_op", "partition": "_partition", "offset": "_offset"}
-                    )
-            stored_schema = _with_system_columns(new_schema)
-            merged = _align_select(merged, stored_schema)
-
-            snap_id = (snap_before or {"snapshot_id": -1})["snapshot_id"] + 1
-            # a STAGED merge writes to its own token-named dir: an
-            # interleaved real commit would otherwise reuse snap-{id} and
-            # overwrite the staged bytes (and a later abort would delete
-            # the published commit's data)
-            stage = getattr(self, "_stage_token", None)
-            data_name = (
-                f"snap-{snap_id:06d}" if stage is None else f"staged-{stage[7:-5]}"
-            )
-            data_path = os.path.join(self.path, "data", data_name)
-            merged.write.mode("overwrite").parquet(data_path)
-
-            if single_pass:
-                per_part = {
-                    int(r["_partition"]): (int(r["lo"]), int(r["hi"]) + 1, int(r["n"]))
-                    for r in self.spark.read.schema(stored_schema)
-                    .parquet(data_path)
-                    .groupBy("_partition")
-                    .agg(
-                        F.min("_offset").alias("lo"),
-                        F.max("_offset").alias("hi"),
-                        F.count("*").alias("n"),
-                    )
-                    .collect()
-                }
-                if not per_part:
-                    shutil.rmtree(data_path, ignore_errors=True)
-                    return CommitResult(skipped=True, wall_ms=int((time.monotonic() - t0) * 1000))
-                per_part = self._clip_ranges(per_part, ranges, delivered)
-
-            path_fields = (
-                {"data_paths": self._snapshot_paths(snap_before) + [data_path]}
-                if mor
-                else {"data_path": data_path}
-            )
-            return self._finalize_commit(
-                snap_id, path_fields, new_schema, per_part, ranges, delivered, batch_id, t0
-            )
-        finally:
-            if not single_pass:
-                fresh.unpersist()
+        return self._commit_batch(winners, batch_id, ranges)
 
     def merge_patch(
         self,
@@ -1180,47 +1170,133 @@ class ParquetSnapshotTable:
         side streams scan→join→write with no exchange; then the same CoW
         rewrite + atomic-commit tail as ``merge_into``.
         """
-        t0 = time.monotonic()
         if self._write_mode() != "cow":
             raise NotImplementedError(
                 "merge_patch composes column-level state and requires the CoW "
                 "write mode; MoR/bucketed reads resolve row-level winners"
             )
-        if ranges is None:
-            ranges = compute_ranges(patch_winners)
-        delivered = self.delivered_ranges()
-        if ranges:
+        return self._commit_batch(patch_winners, batch_id, ranges, sets_col=sets_col)
+
+    def _commit_batch(
+        self,
+        batch: DataFrame,
+        batch_id: int,
+        ranges: dict[int, tuple[int, int]] | None,
+        sets_col: str | None = None,
+    ) -> CommitResult:
+        """The one fenced commit behind :meth:`merge_into`,
+        :meth:`merge_patch` (``sets_col`` set: a patch batch) and
+        :meth:`stage_merge`: ranges → fence → stats → schema → resolve →
+        write → finalize, each step branching on the write mode inline."""
+        t0 = time.monotonic()
+        owned: list[DataFrame] = []
+
+        def skipped() -> CommitResult:
+            return CommitResult(skipped=True, wall_ms=int((time.monotonic() - t0) * 1000))
+
+        def cache(df: DataFrame) -> DataFrame:
+            # Only claim a frame the caller has NOT persisted:
+            # unpersisting a caller-owned cache would silently destroy it.
+            if df.storageLevel == StorageLevel.NONE:
+                df = df.persist(StorageLevel.MEMORY_AND_DISK)
+                owned.append(df)
+            return df
+
+        try:
+            if not ranges:
+                # Empty ranges mean the same as none: an empty dict would
+                # make every fence and in-order test vacuously pass, and a
+                # lower-offset row in an undelivered gap would replace a
+                # newer stored row. compute_ranges is a full evaluation of
+                # the batch pipeline (scan + LWW shuffle); persist FIRST so
+                # it doubles as the cache materialization every later pass
+                # reads (without it the merge evaluated the SAME pipeline a
+                # second time: ~2× the resolve cost on every commit that
+                # passes no ranges). Callers that pass ranges (the replay
+                # and streaming paths, which plan ranges from footer
+                # metadata) get no persist for their big single-pass loads.
+                batch = cache(batch)
+                ranges = compute_ranges(batch)
+            delivered = self.delivered_ranges()
             decision = fence_decision(ranges, delivered)
             if decision.skip:
-                return CommitResult(skipped=True, wall_ms=int((time.monotonic() - t0) * 1000))
-            # Order enforcement runs for EVERY ranged batch, not only those
-            # that overlap a delivered interval: a gap backfill (range
-            # entirely inside an undelivered hole below the watermark,
-            # e.g. delivered=[(10,20)] and range (0,10)) overlaps nothing,
-            # but composing its stale column values over newer stored
-            # state would regress the table just the same. Per partition a
-            # range must be either fully covered (idempotent retry — rows
-            # dropped below) or start at/past the delivered watermark.
-            for p, (lo, hi) in ranges.items():
-                ivs = delivered.get(p, [])
-                if ivs and lo < ivs[-1][1] and not _interval_covered(lo, hi, ivs):
-                    raise ValueError(
-                        "merge_patch requires in-order batches: range "
-                        f"[{lo}, {hi}) on partition {p} starts below the "
-                        f"delivered watermark {ivs[-1][1]} without being a "
-                        "covered replay; re-resolve the overlap with "
-                        "resolve_partial_updates over the raw events instead"
-                    )
-            if decision.needs_filter:
-                patch_winners = _drop_delivered(patch_winners, delivered)
-        snap_before = self.current_snapshot()
+                return skipped()
+            if sets_col is not None:
+                # Order enforcement runs for EVERY patch batch, not only
+                # those that overlap a delivered interval: a gap backfill
+                # (range entirely inside an undelivered hole below the
+                # watermark, e.g. delivered=[(10,20)] and range (0,10))
+                # overlaps nothing, but composing its stale column values
+                # over newer stored state would regress the table just the
+                # same. Per partition a range must be either fully covered
+                # (idempotent retry — rows dropped by the fence) or start
+                # at/past the delivered watermark.
+                for p, (lo, hi) in ranges.items():
+                    ivs = delivered.get(p, [])
+                    if ivs and lo < ivs[-1][1] and not _interval_covered(lo, hi, ivs):
+                        raise ValueError(
+                            "merge_patch requires in-order batches: range "
+                            f"[{lo}, {hi}) on partition {p} starts below the "
+                            f"delivered watermark {ivs[-1][1]} without being a "
+                            "covered replay; re-resolve the overlap with "
+                            "resolve_partial_updates over the raw events instead"
+                        )
+            fresh = _drop_delivered(batch, delivered) if decision.needs_filter else batch
+            snap_before = self.current_snapshot()
+            mode = self._write_mode()
+            n = None
+            if mode == "bucketed":
+                n = self._n_buckets or DEFAULT_N_BUCKETS
+                if snap_before is not None and "bucket_paths" in snap_before:
+                    n = int(snap_before["n_buckets"])
+                    if self._n_buckets is not None and self._n_buckets != n:
+                        raise ValueError(
+                            f"table was bucketed with n_buckets={n}; cannot reopen with "
+                            f"n_buckets={self._n_buckets} (bucket assignment must be stable)"
+                        )
 
-        fresh = patch_winners.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            per_part = _fresh_partition_stats(fresh)
-            if not per_part:
-                return CommitResult(skipped=True, wall_ms=int((time.monotonic() - t0) * 1000))
-            per_part = self._clip_ranges(per_part, ranges, delivered)
+            # Stats. Every MoR commit and every CoW initial load runs
+            # SINGLE-PASS over the input: the winner set is computed
+            # exactly once straight into the write (no persist);
+            # per-partition lineage stats come from a post-write
+            # column-pruned scan of the 2 system columns of the
+            # just-written dir — measured CHEAPER (0.3-1 s, codegen'd,
+            # parallel) than riding an Observation on the write (96
+            # interpreted per-row aggregate expressions cost 2-3.7 s on an
+            # 8-core 3.1M-event load) and it scales with the cluster
+            # instead of with row count × partitions. Re-measured at
+            # local[4] on a 3M-row write: the Observation took 3.36 s at 8
+            # Kafka partitions and 4.16 s at 32, the read-back scan 2.87 s
+            # and 2.63 s. The Observation does save two of a small MoR
+            # micro-batch's jobs (streaming freshness 0.75× in an
+            # in-process A/B), but its cost grows with the partition
+            # count, so the scan stays. Every other commit references the
+            # batch more than once (stats, then the merge), so it persists
+            # it — serialized level, because a big backfill's winner set
+            # can exceed what deserialized on-heap caching tolerates
+            # alongside running tasks (observed OOM at 8.6M wide rows /
+            # 16g heap) — and reads its stats off one aggregate.
+            single_pass = sets_col is None and (
+                mode == "mor" or (mode == "cow" and snap_before is None)
+            )
+            per_part, touched = None, []
+            if not single_pass:
+                if batch.storageLevel == StorageLevel.NONE:
+                    fresh = cache(fresh)
+                per_part, touched = _partition_stats(fresh, n_buckets=n)
+                if not per_part:
+                    return skipped()
+                if -1 in touched:
+                    # xxhash64(NULL) returns the SEED (42), not NULL, so a
+                    # NULL conv_id would otherwise be SILENTLY stored under
+                    # bucket pmod(42, n) — unreachable by read_key,
+                    # unjoinable by later merges.
+                    raise ValueError(
+                        "bucketed merge requires a non-null conv_id on every row "
+                        "(xxhash64(NULL) degenerates to the seed, silently "
+                        "misfiling the row); fix the producer or route null-key "
+                        "rows to a DLQ before merge_into"
+                    )
 
             incoming_payload = T.StructType(
                 [
@@ -1229,44 +1305,78 @@ class ParquetSnapshotTable:
                     if f.name not in ENVELOPE_COLUMNS and f.name != sets_col
                 ]
             )
-            new_schema = merge_schemas(self.table_schema(), incoming_payload)
-            payload_value_cols = [
-                f.name for f in new_schema.fields if f.name not in KEY_COLUMNS
-            ]
-            stored_schema = _with_system_columns(new_schema)
+            new_schema = merge_schemas(self._schema_of(snap_before), incoming_payload)
 
-            if snap_before is None:
-                # cold start: only inserts and tombstones can land
-                merged = _align_select(
-                    fresh.filter(F.col("op") != "U").withColumnsRenamed(
-                        {"op": "_op", "partition": "_partition", "offset": "_offset"}
-                    ),
-                    stored_schema,
-                )
-            else:
-                stored = _align_select(self._read_full(), stored_schema)
-                patched, inserts = _compose_patch(
-                    stored, fresh, payload_value_cols, sets_col
-                )
-                merged = _align_select(patched, stored_schema).unionByName(
-                    _align_select(inserts, stored_schema)
-                )
+            # Reopening a cow/mor table as bucketed is a one-time FULL
+            # conversion: every stored row folds into buckets (otherwise
+            # the new manifest would reference only the batch's buckets
+            # and silently drop the table while the carried-forward fence
+            # blocked re-ingest — permanent data loss).
+            converting = (
+                mode == "bucketed"
+                and snap_before is not None
+                and "bucket_paths" not in snap_before
+                and bool(self._snapshot_paths(snap_before))
+            )
+            manifest = (snap_before or {}).get("bucket_paths", {})
+            prior = None
+            if converting or (mode == "cow" and snap_before is not None):
+                # CoW rewrites the table; a conversion resolves MoR deltas
+                # (window) and keeps tombstones
+                prior = self._read_full(snap_before)
+            elif mode == "bucketed" and any(str(b) in manifest for b in touched):
+                # old bucket files read under their OWN stored schema, then
+                # aligned — columns added by this batch surface as nulls
+                # (writer-side evolution for touched buckets; untouched
+                # buckets evolve reader-side like MoR deltas)
+                prior = self._read_full(snap_before, buckets=touched)
+            # MoR: ALWAYS a pure write of the batch winners as one delta
+            # dir (O(batch)); cross-commit LWW happens at read (max _offset
+            # per key), which also covers the out-of-order case.
+            merged = _resolve(
+                prior, fresh, new_schema, _batch_in_order(ranges, delivered), sets_col
+            )
 
             snap_id = (snap_before or {"snapshot_id": -1})["snapshot_id"] + 1
-            data_path = os.path.join(self.path, "data", f"snap-{snap_id:06d}")
-            merged.write.mode("overwrite").parquet(data_path)
+            # a STAGED merge writes to its own token-named dir: an
+            # interleaved real commit would otherwise reuse snap-{id} and
+            # overwrite the staged bytes (and a later abort would delete
+            # the published commit's data)
+            stage = getattr(self, "_stage_token", None)
+            data_name = f"snap-{snap_id:06d}" if stage is None else f"staged-{stage[7:-5]}"
+            data_path = os.path.join(self.path, "data", data_name)
+            if mode == "bucketed":
+                layout = {
+                    "bucket_paths": _write_buckets(
+                        merged, data_path, n, None if converting else touched, manifest
+                    ),
+                    "n_buckets": n,
+                }
+            else:
+                merged.write.mode("overwrite").parquet(data_path)
+                layout = (
+                    {"data_paths": self._snapshot_paths(snap_before) + [data_path]}
+                    if mode == "mor"
+                    else {"data_path": data_path}
+                )
+
+            if single_pass:
+                # read under the stored schema: without one, Spark
+                # schedules a footer schema-inference job per commit
+                per_part, _ = _partition_stats(
+                    self.spark.read.schema(_with_system_columns(new_schema)).parquet(data_path),
+                    prefix="_",
+                )
+                if not per_part:
+                    shutil.rmtree(data_path, ignore_errors=True)
+                    return skipped()
+            per_part = self._clip_ranges(per_part, ranges, delivered)
             return self._finalize_commit(
-                snap_id,
-                {"data_path": data_path},
-                new_schema,
-                per_part,
-                ranges,
-                delivered,
-                batch_id,
-                t0,
+                snap_id, layout, new_schema, per_part, ranges, delivered, batch_id, t0
             )
         finally:
-            fresh.unpersist()
+            for df in owned:
+                df.unpersist()
 
     # --- write-audit-publish (WAP) staging --------------------------------
     # The Iceberg WAP pattern (spark.wap.id / branch commits) for the
@@ -1392,235 +1502,6 @@ class ParquetSnapshotTable:
                 shutil.rmtree(p, ignore_errors=True)
         os.unlink(os.path.join(self.path, SNAPSHOT_DIR, token))
 
-    def _merge_bucketed(
-        self,
-        fresh: DataFrame,
-        batch_id: int,
-        ranges: dict[int, tuple[int, int]],
-        delivered: dict[int, list[tuple[int, int]]],
-        snap_before: dict | None,
-        t0: float,
-    ) -> CommitResult:
-        """Hash-bucketed copy-on-write merge: stored rows split into
-        ``n_buckets`` dirs by ``pmod(xxhash64(conv_id), n)``; a commit
-        reads and rewrites ONLY the buckets containing a batch key, and
-        the snapshot manifest (``bucket_paths``) carries untouched
-        buckets forward by reference. The middle point of the
-        write-amplification triangle: plain CoW rewrites O(table) per
-        commit and reads clean; MoR writes O(batch) but re-resolves
-        every delta dir at read until compaction; bucketed writes
-        O(touched buckets) and reads clean with NO window resolve
-        (bucket dirs are key-disjoint and internally resolved). At
-        100 TB with ``n_buckets`` sized so one bucket ≈ a few GB, a
-        trickle batch touching 1% of conversations rewrites ~1% of the
-        table — the same file-pruned MERGE shape Iceberg gets from
-        bucket partition transforms (the reference's sink is append-only
-        with no table maintenance at all; KafkaBatchSink provenance in
-        :class:`ParquetSnapshotTable`).
-
-        Buckets hash ``conv_id`` alone, not the full key: a
-        conversation's turns co-locate, so the per-bucket merge never
-        crosses dirs, and the assignment matches the conv_id salting the
-        streaming path uses for hot-conversation skew. xxhash64 is a
-        fixed published algorithm (seed 42 in Spark), so assignments are
-        stable across sessions and versions; ``n_buckets`` is pinned in
-        the snapshot and a conflicting reopen raises.
-        """
-        if snap_before is not None and "bucket_paths" in snap_before:
-            n = int(snap_before["n_buckets"])
-            if self._n_buckets is not None and self._n_buckets != n:
-                raise ValueError(
-                    f"table was bucketed with n_buckets={n}; cannot reopen with "
-                    f"n_buckets={self._n_buckets} (bucket assignment must be stable)"
-                )
-        else:
-            n = self._n_buckets or DEFAULT_N_BUCKETS
-        fresh = fresh.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            bucket_of = F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n)).cast("int")
-            # ONE aggregate job carries the per-partition lineage stats
-            # AND the touched-bucket set AND the NULL-key contract check
-            # (collect_set drops NULLs, so a NULL conv_id is encoded as
-            # sentinel -1) — previously two scheduled jobs per commit
-            # (stats, then a distinct+collect over the bucket ids); both
-            # read the persisted winners, so fusing them saves a full
-            # job round-trip on every bucketed commit.
-            stat_rows = (
-                fresh.groupBy("partition")
-                .agg(
-                    F.min("offset").alias("lo"),
-                    F.max("offset").alias("hi"),
-                    F.count("*").alias("n"),
-                    F.collect_set(
-                        F.when(F.col("conv_id").isNull(), F.lit(-1)).otherwise(bucket_of)
-                    ).alias("bs"),
-                )
-                .collect()
-            )
-            per_part = {
-                int(r["partition"]): (int(r["lo"]), int(r["hi"]) + 1, int(r["n"]))
-                for r in stat_rows
-            }
-            if not per_part:
-                return CommitResult(skipped=True, wall_ms=int((time.monotonic() - t0) * 1000))
-            per_part = self._clip_ranges(per_part, ranges, delivered)
-
-            incoming_payload = T.StructType(
-                [f for f in fresh.schema.fields if f.name not in ENVELOPE_COLUMNS]
-            )
-            new_schema = merge_schemas(self._schema_of(snap_before), incoming_payload)
-            stored_schema = _with_system_columns(new_schema)
-            # the WRITE-side guard: covers rows the batch check below never
-            # sees — stored NULL-key rows folded in by a cow/mor→bucketed
-            # conversion (review finding). Zero extra scans: the error
-            # raises inside the write job itself, aborting the commit
-            # before any snapshot is published.
-            bucket_of_checked = F.when(
-                F.col("conv_id").isNull(),
-                F.raise_error(
-                    F.lit(
-                        "bucketed table contract: NULL conv_id row encountered "
-                        "while writing buckets (stored rows folded in by a "
-                        "cow/mor conversion?) — xxhash64(NULL) degenerates to "
-                        "the seed and would silently misfile the row; repair "
-                        "or delete null-key rows before converting"
-                    )
-                ).cast("int"),
-            ).otherwise(bucket_of)
-
-            def align(df: DataFrame) -> DataFrame:
-                return _align_select(df, stored_schema)
-
-            batch_rows = align(
-                fresh.withColumnsRenamed(
-                    {"op": "_op", "partition": "_partition", "offset": "_offset"}
-                )
-            )
-            # Touched-bucket set + NULL-key contract check, both computed
-            # by the fused stats aggregate above: xxhash64(NULL) returns
-            # the SEED (42), not NULL, so a NULL conv_id would otherwise
-            # be SILENTLY stored under bucket pmod(42, n) — unreachable
-            # by read_key, unjoinable by later merges (r5 advice asked
-            # for a loud contract error here).
-            batch_buckets = {int(b) for r in stat_rows for b in r["bs"]}
-            if -1 in batch_buckets:
-                raise ValueError(
-                    "bucketed merge requires a non-null conv_id on every row "
-                    "(xxhash64(NULL) degenerates to the seed, silently "
-                    "misfiling the row); fix the producer or route null-key "
-                    "rows to a DLQ before merge_into"
-                )
-            touched = sorted(batch_buckets)
-            # Reopening a cow/mor table as bucketed is a one-time FULL
-            # conversion: every stored row folds into buckets (otherwise
-            # the new manifest would reference only the batch's buckets
-            # and silently drop the table while the carried-forward fence
-            # blocked re-ingest — permanent data loss).
-            converting = (
-                snap_before is not None
-                and "bucket_paths" not in snap_before
-                and bool(self._snapshot_paths(snap_before))
-            )
-            manifest: dict[str, str] = (
-                {} if converting else dict((snap_before or {}).get("bucket_paths", {}))
-            )
-            prior_paths = [manifest[str(b)] for b in touched if str(b) in manifest]
-            if converting:
-                # resolves MoR deltas (window) and keeps tombstones
-                prior = align(self._read_full(snap_before))
-            elif prior_paths:
-                # old bucket files read under their OWN stored schema, then
-                # aligned — columns added by this batch surface as nulls
-                # (writer-side evolution for touched buckets; untouched
-                # buckets evolve reader-side like MoR deltas).
-                prior = align(
-                    self.spark.read.schema(
-                        _with_system_columns(self._schema_of(snap_before))
-                    ).parquet(*prior_paths)
-                )
-            else:
-                prior = None
-            if prior is not None:
-                in_order = bool(ranges) and _batch_in_order(ranges, delivered)
-                if in_order:
-                    merged = prior.join(
-                        batch_rows.select(*KEY_COLUMNS), KEY_COLUMNS, "left_anti"
-                    ).unionByName(batch_rows)
-                else:
-                    from kafka_plugins_spark.operators.resolve import last_writer_wins
-
-                    env = {"_op": "op", "_partition": "partition", "_offset": "offset"}
-                    combined = prior.withColumnsRenamed(env).unionByName(
-                        batch_rows.withColumnsRenamed(env)
-                    )
-                    merged = last_writer_wins(combined).withColumnsRenamed(
-                        {v: k for k, v in env.items()}
-                    )
-            else:
-                merged = batch_rows
-
-            snap_id = (snap_before or {"snapshot_id": -1})["snapshot_id"] + 1
-            data_path = os.path.join(self.path, "data", f"snap-{snap_id:06d}")
-            # repartition by _bucket BEFORE partitionBy: without it every
-            # shuffle task writes one file into every bucket dir it holds
-            # rows for (tasks × buckets small files — measured 6× size
-            # bloat from parquet per-file overhead at bench scale). With
-            # it each bucket is one task's contiguous write. Write
-            # parallelism = touched buckets; size n_buckets so a bucket
-            # is a few GB and that is exactly the parallelism you want.
-            # sortWithinPartitions after the bucket repartition: rows land
-            # in the parquet files ordered by key, so row-group min/max
-            # stats on conv_id are tight — read_key and future merges
-            # prune row groups inside the bucket, not just the bucket
-            # dir. Task-local sort, no extra exchange.
-            (
-                merged.withColumn("_bucket", bucket_of_checked)
-                .repartition(n if converting else max(len(touched), 1), F.col("_bucket"))
-                .sortWithinPartitions("_bucket", *KEY_COLUMNS)
-                .write.mode("overwrite")
-                .partitionBy("_bucket")
-                .parquet(data_path)
-            )
-            if converting:
-                # every stored row was rewritten — the manifest is exactly
-                # what the write produced. Defensive: only integer bucket
-                # suffixes may enter the manifest — a non-integer dir
-                # (e.g. __HIVE_DEFAULT_PARTITION__ from a future NULL
-                # bucket expression) stored as a manifest key would crash
-                # every later _snapshot_paths read far from the cause
-                # (r5 advice) — fail the conversion loudly instead.
-                manifest = {}
-                for name in sorted(os.listdir(data_path)):
-                    if not name.startswith("_bucket="):
-                        continue
-                    suffix = name.split("=", 1)[1]
-                    if not suffix.lstrip("-").isdigit():
-                        raise ValueError(
-                            "cannot convert table to bucketed mode: stored rows "
-                            "with NULL conv_id have no bucket (found partition "
-                            f"dir {name!r}); delete or repair them first"
-                        )
-                    manifest[suffix] = os.path.join(data_path, name)
-            else:
-                for b in touched:
-                    bdir = os.path.join(data_path, f"_bucket={b}")
-                    if os.path.isdir(bdir):
-                        manifest[str(b)] = bdir
-                    else:
-                        manifest.pop(str(b), None)
-            return self._finalize_commit(
-                snap_id,
-                {"bucket_paths": manifest, "n_buckets": n},
-                new_schema,
-                per_part,
-                ranges,
-                delivered,
-                batch_id,
-                t0,
-            )
-        finally:
-            fresh.unpersist()
-
     def _finalize_commit(
         self,
         snap_id: int,
@@ -1733,63 +1614,57 @@ class ParquetSnapshotTable:
             return CommitResult(skipped=True)
         if buckets is not None and "bucket_paths" not in snap:
             raise ValueError("compact(buckets=...) requires a bucketed table")
-        snap_id = snap["snapshot_id"] + 1
-        data_path = os.path.join(self.path, "data", f"snap-{snap_id:06d}")
-        new_snap = _carry_snapshot(snap)
+        todo = None
         if "bucket_paths" in snap:
             # bucketed compaction keeps the layout: rewrite the chosen
             # buckets (default all) without tombstones; untouched entries
             # stay by reference (dead tombstone weight is the only thing
             # compaction removes here — there are no deltas to fold).
-            n = int(snap["n_buckets"])
-            bucket_of = F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n)).cast("int")
-            manifest = dict(snap["bucket_paths"])
-            if buckets is None:
-                todo = sorted(int(b) for b in manifest)
-            else:
-                todo = sorted(int(b) for b in buckets if str(b) in manifest)
+            manifest = snap["bucket_paths"]
+            wanted = manifest if buckets is None else buckets
+            todo = sorted(int(b) for b in wanted if str(b) in manifest)
             if not todo:
                 return CommitResult(skipped=True, wall_ms=int((time.monotonic() - t0) * 1000))
-            stored = _with_system_columns(self._schema_of(snap))
-            compacted = (
-                self.spark.read.schema(stored)
-                .parquet(*[manifest[str(b)] for b in todo])
-                .filter(F.coalesce(F.col("_op") != "D", F.lit(True)))
-            )
-            (
-                compacted.withColumn("_bucket", bucket_of)
-                .repartition(len(todo), F.col("_bucket"))
-                .sortWithinPartitions("_bucket", *KEY_COLUMNS)
-                .write.mode("overwrite")
-                .partitionBy("_bucket")
-                .parquet(data_path)
-            )
-            for b in todo:
-                bdir = os.path.join(data_path, f"_bucket={b}")
-                if os.path.isdir(bdir):
-                    manifest[str(b)] = bdir
-                else:  # the bucket held only tombstones — now empty
-                    manifest.pop(str(b), None)
-            new_snap["bucket_paths"] = manifest
-        else:
-            compacted = self._read_full().filter(
-                F.coalesce(F.col("_op") != "D", F.lit(True))
-            )
-            compacted.write.mode("overwrite").parquet(data_path)
-            if "data_paths" in new_snap:
-                new_snap["data_paths"] = [data_path]
-                new_snap.pop("data_path", None)
-            else:
-                new_snap["data_path"] = data_path
+        snap_id = snap["snapshot_id"] + 1
+        compacted = self._read_full(snap, todo).filter(
+            F.coalesce(F.col("_op") != "D", F.lit(True))
+        )
+        layout = self._rewrite_data(snap, snap_id, compacted, todo)
+        new_snap = self._commit_maintenance(snap, snap_id, t0, **layout, compaction=True)
+        return CommitResult(skipped=False, snapshot_id=snap_id, wall_ms=new_snap["wall_ms"])
+
+    def _rewrite_data(
+        self, snap: dict, snap_id: int, rows: DataFrame, buckets: list[int] | None
+    ) -> dict:
+        """Write ``rows`` as the data of maintenance commit ``snap_id``
+        over ``snap`` and return its layout fields: the listed buckets of
+        a bucketed table (the rest carried by reference), else one dir
+        that replaces every data dir."""
+        data_path = os.path.join(self.path, "data", f"snap-{snap_id:06d}")
+        if buckets is not None:
+            return {
+                "bucket_paths": _write_buckets(
+                    rows, data_path, int(snap["n_buckets"]), buckets, snap["bucket_paths"]
+                )
+            }
+        rows.write.mode("overwrite").parquet(data_path)
+        return {"data_paths": [data_path]} if "data_paths" in snap else {"data_path": data_path}
+
+    def _commit_maintenance(self, base: dict, snap_id: int, t0: float, **fields) -> dict:
+        """Shared tail of compact / purge_keys / rebucket / rollback_to:
+        publish a snapshot derived from ``base`` (its per-commit facts
+        dropped) that applies no rows and records no lineage, plus
+        ``fields`` — the new layout and the commit's own fact."""
+        new_snap = _carry_snapshot(base)
         new_snap.update(
             snapshot_id=snap_id,
             lineage=[],
             rows_applied=0,
             wall_ms=int((time.monotonic() - t0) * 1000),
-            compaction=True,
+            **fields,
         )
         self._commit(snap_id, new_snap)
-        return CommitResult(skipped=False, snapshot_id=snap_id, wall_ms=new_snap["wall_ms"])
+        return new_snap
 
     def purge_keys(
         self, conv_ids: list[str], purge_history: bool = False
@@ -1869,81 +1744,42 @@ class ParquetSnapshotTable:
                 "anyway; publish_staged() or abort_staged() them first"
             )
         ids = sorted(set(conv_ids))
-        snap_id = snap["snapshot_id"] + 1
-        data_path = os.path.join(self.path, "data", f"snap-{snap_id:06d}")
-        new_snap = _carry_snapshot(snap)
-        stored = _with_system_columns(self._schema_of(snap))
-        buckets_rewritten = None
+        todo = None
         if "bucket_paths" in snap:
-            n = int(snap["n_buckets"])
-            manifest = dict(snap["bucket_paths"])
             # id list → bucket ids through the memoized job-free
             # LocalRelation path (one multi-row VALUES query for every
             # uncached id — the same JVM xxhash64 expression the writer
             # uses, ZERO scheduled jobs; r6 verdict item 6: a
             # createDataFrame job per purge was noise). The only job a
             # purge schedules is the rewrite itself.
-            hit = set(_buckets_of(self.spark, ids, n).values())
-            todo = sorted(b for b in hit if str(b) in manifest)
+            hit = set(_buckets_of(self.spark, ids, int(snap["n_buckets"])).values())
+            todo = sorted(b for b in hit if str(b) in snap["bucket_paths"])
             if not todo:
                 return {"skipped": True, "rows_purged": 0}
-            src = self.spark.read.schema(stored).parquet(
-                *[manifest[str(b)] for b in todo]
+        snap_id = snap["snapshot_id"] + 1
+        # ONE scan: the write action carries an Observation that counts
+        # the dropped rows map-side (a separate count() would read every
+        # rewritten file twice)
+        kept, obs = _observe_purged(self._read_full(snap, todo), ids)
+        layout = self._rewrite_data(snap, snap_id, kept, todo)
+        rows_purged = int(obs.get["rows_purged"] or 0)
+        if rows_purged == 0:
+            shutil.rmtree(
+                os.path.join(self.path, "data", f"snap-{snap_id:06d}"), ignore_errors=True
             )
-            # ONE scan: the write action carries an Observation that
-            # counts the dropped rows map-side (a separate count() would
-            # read every touched bucket twice)
-            kept, obs = _observe_purged(src, ids)
-            bucket_of = F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n)).cast("int")
-            (
-                kept.withColumn("_bucket", bucket_of)
-                .repartition(len(todo), F.col("_bucket"))
-                .sortWithinPartitions("_bucket", *KEY_COLUMNS)
-                .write.mode("overwrite")
-                .partitionBy("_bucket")
-                .parquet(data_path)
-            )
-            rows_purged = int(obs.get["rows_purged"] or 0)
-            if rows_purged == 0:
-                shutil.rmtree(data_path, ignore_errors=True)
-                return {"skipped": True, "rows_purged": 0}
-            for b in todo:
-                bdir = os.path.join(data_path, f"_bucket={b}")
-                if os.path.isdir(bdir):
-                    manifest[str(b)] = bdir
-                else:  # every row in the bucket belonged to purged keys
-                    manifest.pop(str(b), None)
-            new_snap["bucket_paths"] = manifest
-            buckets_rewritten = len(todo)
-        else:
-            kept, obs = _observe_purged(self._read_full(), ids)
-            kept.write.mode("overwrite").parquet(data_path)
-            rows_purged = int(obs.get["rows_purged"] or 0)
-            if rows_purged == 0:
-                shutil.rmtree(data_path, ignore_errors=True)
-                return {"skipped": True, "rows_purged": 0}
-            if "data_paths" in new_snap:
-                new_snap["data_paths"] = [data_path]
-                new_snap.pop("data_path", None)
-            else:
-                new_snap["data_path"] = data_path
-        new_snap.update(
-            snapshot_id=snap_id,
-            lineage=[],
-            rows_applied=0,
-            wall_ms=int((time.monotonic() - t0) * 1000),
-            purge={"n_keys": len(ids), "rows_purged": int(rows_purged)},
+            return {"skipped": True, "rows_purged": 0}
+        new_snap = self._commit_maintenance(
+            snap, snap_id, t0, **layout, purge={"n_keys": len(ids), "rows_purged": rows_purged}
         )
-        self._commit(snap_id, new_snap)
         out = {
             "skipped": False,
             "snapshot_id": snap_id,
-            "rows_purged": int(rows_purged),
+            "rows_purged": rows_purged,
             "n_keys": len(ids),
             "wall_ms": new_snap["wall_ms"],
         }
-        if buckets_rewritten is not None:
-            out["buckets_rewritten"] = buckets_rewritten
+        if todo is not None:
+            out["buckets_rewritten"] = len(todo)
         if purge_history:
             out["expired"] = self.expire_snapshots(keep_last=1)
         return out
@@ -1988,43 +1824,21 @@ class ParquetSnapshotTable:
             return CommitResult(skipped=True)
         snap_id = snap["snapshot_id"] + 1
         data_path = os.path.join(self.path, "data", f"snap-{snap_id:06d}")
-        stored = _with_system_columns(self._schema_of(snap))
-        bucket_of = F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_new)).cast("int")
-        src = self.spark.read.schema(stored).parquet(
-            *[p for _, p in sorted(snap["bucket_paths"].items())]
-        )
-        (
-            src.withColumn("_bucket", bucket_of)
-            .repartition(n_new, F.col("_bucket"))
-            .sortWithinPartitions("_bucket", *KEY_COLUMNS)
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(data_path)
-        )
-        manifest = {
-            str(b): os.path.join(data_path, f"_bucket={b}")
-            for b in range(n_new)
-            if os.path.isdir(os.path.join(data_path, f"_bucket={b}"))
-        }
-        new_snap = _carry_snapshot(snap)
-        new_snap.update(
-            snapshot_id=snap_id,
+        manifest = _write_buckets(self._read_full(snap), data_path, n_new)
+        new_snap = self._commit_maintenance(
+            snap,
+            snap_id,
+            t0,
             bucket_paths=manifest,
             n_buckets=n_new,
-            lineage=[],
-            rows_applied=0,
-            wall_ms=int((time.monotonic() - t0) * 1000),
             rebucket={"from": n_old, "to": n_new},
         )
-        self._commit(snap_id, new_snap)
         if self._n_buckets is not None:
             # the handle that PERFORMED the evolution follows it; other
             # handles still pinned to the old count keep refusing (the
             # conflicting-reopen guard)
             self._n_buckets = n_new
-        return CommitResult(
-            skipped=False, snapshot_id=snap_id, wall_ms=new_snap["wall_ms"]
-        )
+        return CommitResult(skipped=False, snapshot_id=snap_id, wall_ms=new_snap["wall_ms"])
 
     def rollback_to(self, snapshot_id: int) -> CommitResult:
         """Roll the table back to an earlier snapshot's state by
@@ -2038,15 +1852,13 @@ class ParquetSnapshotTable:
         Lineage is an append-only activity log: rows from rolled-back
         commits remain recorded there by design.
         """
+        t0 = time.monotonic()
         target = self.snapshot_by_id(snapshot_id)
         cur = self.current_snapshot()
         if cur is None:
             raise ValueError("cannot rollback an empty table (no current snapshot)")
         new_id = cur["snapshot_id"] + 1
-        new_snap = _carry_snapshot(target)
-        new_snap.update(snapshot_id=new_id, rollback_of=snapshot_id, lineage=[],
-                        rows_applied=0, wall_ms=0)
-        self._commit(new_id, new_snap)
+        self._commit_maintenance(target, new_id, t0, rollback_of=snapshot_id)
         return CommitResult(skipped=False, snapshot_id=new_id)
 
     def expire_snapshots(self, keep_last: int = 1) -> dict:

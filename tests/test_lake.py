@@ -50,9 +50,22 @@ def test_two_half_replay_equals_single_shot(spark, events_path, tmp_path):
     assert_tables_equal(t_two.read().toPandas(), t_one.read().toPandas())
 
 
-def test_failed_batch_does_not_advance_cursor(spark, events_path, tmp_path, monkeypatch):
+# every write mode: None is a fresh table's default, CoW
+LAYOUTS = pytest.mark.parametrize(
+    "mode, n_buckets",
+    [(None, None), ("mor", None), ("bucketed", 4)],
+    ids=["None", "mor", "bucketed"],
+)
+
+
+@LAYOUTS
+def test_failed_batch_does_not_advance_cursor(
+    spark, events_path, tmp_path, monkeypatch, mode, n_buckets
+):
     path = str(tmp_path / "t")
-    table, _ = replay(spark, events_path, path, chunk_size=150, max_chunks=1)
+    table, _ = replay(
+        spark, events_path, path, chunk_size=150, max_chunks=1, mode=mode, n_buckets=n_buckets
+    )
     wm_before = table.watermarks()
 
     # make the data write blow up mid-commit
@@ -63,26 +76,31 @@ def test_failed_batch_does_not_advance_cursor(spark, events_path, tmp_path, monk
 
     monkeypatch.setattr(ParquetSnapshotTable, "_commit", boom)
     with pytest.raises(RuntimeError, match="injected"):
-        replay(spark, events_path, path, chunk_size=150, max_chunks=2)
+        replay(
+            spark, events_path, path, chunk_size=150, max_chunks=2, mode=mode, n_buckets=n_buckets
+        )
     monkeypatch.setattr(ParquetSnapshotTable, "_commit", orig)
 
     t2 = ParquetSnapshotTable(spark, path)
     assert t2.watermarks() == wm_before  # cursor unmoved
     # restart reprocesses exactly the failed range and converges
-    t2, _ = replay(spark, events_path, path, chunk_size=150)
+    t2, _ = replay(spark, events_path, path, chunk_size=150, mode=mode, n_buckets=n_buckets)
     assert_tables_equal(t2.read().toPandas(), duckdb_final_state(events_path))
 
 
 @pytest.mark.parametrize("compact_between", [False, True])
+@LAYOUTS
 def test_failed_publish_retry_keeps_lineage_exact(
-    spark, events_path, tmp_path, monkeypatch, compact_between
+    spark, events_path, tmp_path, monkeypatch, compact_between, mode, n_buckets
 ):
     """A publish that fails after the lineage file is written, then a
     retry: read_lineage() holds exactly one row per (batch, partition)
     that landed. With a compaction in between, the compaction takes the
     failed publish's snapshot id and must not expose its lineage."""
     path = str(tmp_path / "t")
-    table, _ = replay(spark, events_path, path, chunk_size=150, max_chunks=1)
+    table, _ = replay(
+        spark, events_path, path, chunk_size=150, max_chunks=1, mode=mode, n_buckets=n_buckets
+    )
 
     def boom(self, snap_id, snapshot):
         raise RuntimeError("injected failure before snapshot publish")
@@ -90,12 +108,15 @@ def test_failed_publish_retry_keeps_lineage_exact(
     with monkeypatch.context() as m:
         m.setattr(ParquetSnapshotTable, "_commit", boom)
         with pytest.raises(RuntimeError, match="injected"):
-            replay(spark, events_path, path, chunk_size=150, max_chunks=2)
+            replay(
+                spark, events_path, path, chunk_size=150, max_chunks=2, mode=mode,
+                n_buckets=n_buckets,
+            )
     assert table.read_lineage().filter(F.col("batch_id") == 1).count() == 0
     if compact_between:
         assert not table.compact().skipped
 
-    t2, _ = replay(spark, events_path, path, chunk_size=150)
+    t2, _ = replay(spark, events_path, path, chunk_size=150, mode=mode, n_buckets=n_buckets)
     lin = t2.read_lineage()
     assert lin.groupBy("batch_id", "partition").count().filter("count > 1").count() == 0
     landed = {
@@ -128,6 +149,129 @@ def test_partial_overlap_applies_only_suffix(spark, events_path, tmp_path):
         assert lo >= 150  # fence clipped the committed prefix
     lin = table.read_lineage().filter(F.col("batch_id") == 99).collect()
     assert all(r["start_offset"] >= 150 for r in lin)
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor", "bucketed"])
+def test_empty_ranges_are_computed_from_the_batch(spark, tmp_path, mode):
+    """``ranges={}`` means the same as ``ranges=None``: the ranges come
+    from the batch. A lower-offset row in an undelivered gap below the
+    delivered interval must not replace the newer stored row."""
+    table = ParquetSnapshotTable(spark, str(tmp_path / "t"), mode=mode)
+    table.merge_into(
+        last_writer_wins(_batch(spark, [("c1", "user", "new", "I", 150)])),
+        batch_id=0,
+        ranges={0: (100, 200)},
+    )
+    res = table.merge_into(
+        last_writer_wins(_batch(spark, [("c1", "user", "old", "U", 50)])), batch_id=1, ranges={}
+    )
+    assert not res.skipped and res.ranges == {0: (50, 51)}
+    assert [(r["conv_id"], r["text"]) for r in table.read().collect()] == [("c1", "new")]
+
+
+@pytest.mark.parametrize("mode", ["cow", "bucketed"])
+def test_merge_keeps_caller_owned_cache(spark, tmp_path, mode):
+    """A commit that persists its batch must not unpersist a frame the
+    caller persisted."""
+    from pyspark import StorageLevel
+
+    table = ParquetSnapshotTable(spark, str(tmp_path / "t"), mode=mode)
+    table.merge_into(
+        last_writer_wins(_batch(spark, [("k1", "user", "a", "I", 0)])),
+        batch_id=0,
+        ranges={0: (0, 1)},
+    )
+    winners = last_writer_wins(_batch(spark, [("k1", "user", "b", "U", 1)])).persist()
+    try:
+        assert not table.merge_into(winners, batch_id=1, ranges={0: (1, 2)}).skipped
+        assert winners.storageLevel != StorageLevel.NONE
+    finally:
+        winners.unpersist()
+    assert [r["text"] for r in table.read().collect()] == ["b"]
+
+
+# Spark jobs per lake call, counted by job group, over the events_path
+# log split at its middle offset ("given": the caller passes the batch's
+# ranges; "None": the commit computes them). Ceilings are the counts of
+# the three separate merge heads this pipeline replaced.
+JOB_CEILINGS = {
+    "cow": {"initial given": 4, "in-order given": 6, "initial None": 7, "in-order None": 8,
+            "skip given": 0, "skip None": 4, "lower after upper": 6, "compact": 1, "purge": 1},
+    "mor": {"initial given": 4, "in-order given": 4, "initial None": 7, "in-order None": 7,
+            "skip given": 0, "skip None": 4, "lower after upper": 4, "compact": 2, "purge": 1,
+            "stage": 4, "publish": 0},
+    "bucketed": {"initial given": 6, "in-order given": 7, "initial None": 8, "in-order None": 9,
+                 "skip given": 0, "skip None": 4, "lower after upper": 7, "compact": 2,
+                 "purge": 2, "rebucket": 2},
+    "patch": {"initial given": 5, "in-order given": 7, "initial None": 8, "in-order None": 10},
+}
+
+
+@pytest.mark.parametrize("mode", list(JOB_CEILINGS))
+def test_commit_job_budget_every_mode(spark, events_path, tmp_path, mode):
+    from kafka_plugins_spark.lake import compute_ranges
+    from kafka_plugins_spark.operators.resolve import resolve_partial_updates
+
+    sc = spark.sparkContext
+    ev = spark.read.parquet(events_path)
+    mid = (ev.agg(F.max("offset")).first()[0] + 1) // 2
+    lo, hi = ev.filter(F.col("offset") < mid), ev.filter(F.col("offset") >= mid)
+    r_lo, r_hi = compute_ranges(lo), compute_ranges(hi)
+    patch = mode == "patch"
+    sets = F.array(*[F.lit(c) for c in ("role", "text", "tool", "ts")])
+    jobs = {}
+
+    def count(name, fn):
+        group = f"job-budget-{mode}-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            res = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        return res
+
+    def table(name):
+        return ParquetSnapshotTable(
+            spark, str(tmp_path / name), mode="cow" if patch else mode,
+            n_buckets=8 if mode == "bucketed" else None,
+        )
+
+    def merge(t, df, batch_id, ranges, name=None):
+        def call():
+            if patch:
+                w = resolve_partial_updates(df.withColumn("cols_set", sets), emit_sets=True)
+                return t.merge_patch(w, batch_id=batch_id, ranges=ranges)
+            return t.merge_into(last_writer_wins(df), batch_id=batch_id, ranges=ranges)
+
+        return call() if name is None else count(name, call)
+
+    for tag, rl, rh in (("given", r_lo, r_hi), ("None", None, None)):
+        t = table(tag)
+        merge(t, lo, 0, rl, f"initial {tag}")
+        merge(t, hi, 1, rh, f"in-order {tag}")
+    if not patch:
+        t = table("given")
+        assert merge(t, lo, 0, r_lo, "skip given").skipped
+        assert merge(t, lo, 0, None, "skip None").skipped
+        count("compact", t.compact)
+        count("purge", lambda: t.purge_keys(["conv-42-000001", "conv-42-000002"]))
+        if mode == "bucketed":
+            count("rebucket", lambda: t.rebucket(4))
+        ooo = table("ooo")
+        merge(ooo, hi, 1, r_hi)
+        merge(ooo, lo, 0, r_lo, "lower after upper")
+    if mode == "mor":
+        t = table("stage")
+        merge(t, lo, 0, r_lo)
+        staged = count(
+            "stage", lambda: t.stage_merge(last_writer_wins(hi), batch_id=1, ranges=r_hi)
+        )
+        count("publish", lambda: t.publish_staged(staged))
+    assert set(jobs) == set(JOB_CEILINGS[mode])
+    over = {k: (v, JOB_CEILINGS[mode][k]) for k, v in jobs.items() if v > JOB_CEILINGS[mode][k]}
+    assert not over, f"jobs over ceiling (got, ceiling): {over}; all: {jobs}"
 
 
 def test_empty_table_reads_empty(spark, tmp_path):

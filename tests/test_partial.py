@@ -326,6 +326,20 @@ def test_merge_patch_fence_skips_and_enforces_order(spark, tmp_path):
     assert table.read().collect()[0]["text"] == "y"
 
 
+def test_merge_patch_empty_ranges_still_enforce_order(spark, tmp_path):
+    """``ranges={}`` is computed from the batch like ``ranges=None``, so
+    a gap patch below the delivered interval still refuses."""
+    from kafka_plugins_spark.lake import ParquetSnapshotTable
+
+    table = ParquetSnapshotTable(spark, str(tmp_path / "t"))
+    b = _run(spark, [_ev("a", 0, "I", 15, role="user", text="x")], emit_sets=True)
+    table.merge_patch(b, batch_id=0, ranges={0: (10, 20)})
+    gap = _run(spark, [_ev("a", 0, "U", 5, cols_set=["text"], text="stale")], emit_sets=True)
+    with pytest.raises(ValueError, match="in-order"):
+        table.merge_patch(gap, batch_id=1, ranges={})
+    assert table.read().collect()[0]["text"] == "x"
+
+
 def test_merge_patch_schema_evolution_new_column(spark, tmp_path):
     """A later patch batch introducing a NEW payload column widens the
     table (merge_schemas) and backfills older rows with NULL — the same
