@@ -240,6 +240,19 @@ def _observe_purged(src: DataFrame, ids: list[str]) -> tuple[DataFrame, "Observa
     return observed.filter(~flag), obs
 
 
+def _stored_rows(paths: list[str]) -> int:
+    """Rows in the parquet files directly under ``paths``, summed from
+    their footers on the driver (no Spark job)."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(p, f)).num_rows
+        for p in paths
+        for f in os.listdir(p)
+        if f.endswith(".parquet")
+    )
+
+
 def _with_system_columns(payload: T.StructType) -> T.StructType:
     return T.StructType(list(payload.fields) + SYSTEM_FIELDS)
 
@@ -605,7 +618,9 @@ class ParquetSnapshotTable:
     - ``mode="mor"`` (merge-on-read): every commit appends ONE delta dir
       of batch winners — writes are O(batch), reads resolve last-writer-
       wins across delta files (one shuffle by key) until :meth:`compact`
-      folds them. Right for the realistic CDC shape: a long stream of
+      folds them; a point read (:meth:`read_key`) skips the shuffle and
+      resolves its one conversation on the driver from a single scan of
+      every delta dir. Right for the realistic CDC shape: a long stream of
       small commits where CoW's per-commit rewrite is the scale killer
       (N commits cost O(N·table) writes vs O(events) + one compact).
       This mirrors Iceberg's MoR position-delete/equality-delete design.
@@ -879,7 +894,7 @@ class ParquetSnapshotTable:
                 else self.snapshot_by_id(snapshot_id)
             )
         if not self._snapshot_paths(snap):
-            return self.spark.createDataFrame([], self.base_schema)
+            return self.spark.createDataFrame([], self._schema_of(snap))
         payload = [f.name for f in self._schema_of(snap).fields]
         return (
             self._read_full(snap)
@@ -888,12 +903,25 @@ class ParquetSnapshotTable:
         )
 
     def read_key(self, conv_id: str, snapshot_id: int | None = None) -> DataFrame:
-        """Point lookup: every visible turn of one conversation. On a
-        bucketed table this scans ONE bucket dir — the manifest prunes
-        the other ``n_buckets − 1`` before Spark ever lists a file, so a
-        point read against a 100 TB table touches a few GB. On cow/mor
-        snapshots it degrades to ``read().filter(...)`` (full scan; the
-        parquet row-group min/max on conv_id still prunes most pages).
+        """Point lookup: every visible turn of one conversation, one Spark
+        job at most. What is read depends on the snapshot's layout:
+
+        - bucketed: ONE bucket dir — the manifest prunes the other
+          ``n_buckets − 1`` before Spark ever lists a file, so a point
+          read against a 100 TB table touches a few GB. Lazy.
+        - cow, or mor with a single dir: ``read().filter(...)``, a scan
+          of every file with ``conv_id == key`` pushed into the parquet
+          reader. Rows are hash-distributed, so each row group's
+          ``conv_id`` min/max spans the key range and prunes nothing:
+          every stored row is read to return one conversation's. Lazy.
+        - mor with several delta dirs: the same pushed-down scan over
+          every dir, run at CALL time as one job collected to Arrow; the
+          per-key last-writer-wins resolve (max ``_offset``) and the
+          tombstone filter run on the driver over that one
+          conversation's rows, and the result is a local frame (its
+          ``collect`` schedules no job). :meth:`read`'s resolve would
+          instead run a ``row_number`` window across the whole table —
+          an exchange and a second job per lookup.
 
         The bucket id is computed with the SAME JVM expression the
         writer used — never a Python reimplementation of xxhash64, whose
@@ -907,6 +935,9 @@ class ParquetSnapshotTable:
         snap = (
             self.current_snapshot() if snapshot_id is None else self.snapshot_by_id(snapshot_id)
         )
+        paths = self._snapshot_paths(snap)
+        if self._needs_key_resolve(snap, paths):
+            return self._resolve_key_on_driver(snap, paths, conv_id)
         base = None
         if snap is not None and snap.get("bucket_paths"):
             n = int(snap["n_buckets"])
@@ -925,6 +956,42 @@ class ParquetSnapshotTable:
         if base is None:
             base = self.read(snapshot_id)
         return base.filter(F.col("conv_id") == conv_id)
+
+    def _resolve_key_on_driver(self, snap: dict, paths: list[str], conv_id: str) -> DataFrame:
+        """:meth:`read_key` on a multi-dir MoR snapshot: one parallel scan
+        with the key pushed down, no exchange; the :meth:`_read_full`
+        resolve (max ``_offset`` per key) and :meth:`read`'s tombstone
+        filter (a NULL ``_op`` is visible) on the Arrow result. Rows come
+        back ordered by key, under the schema :meth:`read` returns."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        schema = self._schema_of(snap)
+        payload = schema.names
+        scan = (
+            self.spark.read.schema(_with_system_columns(schema))
+            .parquet(*paths)
+            .filter(F.col("conv_id") == conv_id)
+        )
+        rows = scan.toArrow()
+        # keys ascending, newest first within a key: each key's first row
+        # (lowest index) is its winner, and with use_threads=False the
+        # groups come out in that key order
+        rows = rows.take(
+            pc.sort_indices(
+                rows, [(k, "ascending") for k in KEY_COLUMNS] + [("_offset", "descending")]
+            )
+        )
+        rows = rows.append_column("_i", pa.array(range(rows.num_rows), pa.int64()))
+        winners = rows.group_by(KEY_COLUMNS, use_threads=False).aggregate([("_i", "min")])
+        winners = winners["_i_min"]
+        visible = pc.fill_null(pc.not_equal(rows["_op"], "D"), True)
+        # take by a contiguous index array, never filter: pyspark cannot
+        # convert a struct column of zero chunks, which is what an empty
+        # filter or chunked-index take leaves
+        keep = pc.filter(winners, pc.take(visible, winners)).combine_chunks()
+        live = rows.select(payload).take(keep)
+        return self.spark.createDataFrame(live, schema=scan.select(*payload).schema)
 
     def _read_full(self, snap: dict | None = None, buckets: list[int] | None = None) -> DataFrame:
         """Stored rows incl. tombstones + system columns (merge input).
@@ -1757,12 +1824,22 @@ class ParquetSnapshotTable:
             if not todo:
                 return {"skipped": True, "rows_purged": 0}
         snap_id = snap["snapshot_id"] + 1
-        # ONE scan: the write action carries an Observation that counts
-        # the dropped rows map-side (a separate count() would read every
-        # rewritten file twice)
+        # ONE scan: the dropped rows are counted by an Observation on the
+        # rewrite or, bucketed, off the footers (a separate count() would
+        # read every rewritten file twice)
         kept, obs = _observe_purged(self._read_full(snap, todo), ids)
         layout = self._rewrite_data(snap, snap_id, kept, todo)
-        rows_purged = int(obs.get["rows_purged"] or 0)
+        if todo is None:
+            rows_purged = int(obs.get["rows_purged"] or 0)
+        else:
+            # The bucket rewrite shuffles the kept rows. When none is left,
+            # AQE replaces that empty map stage with an empty relation and
+            # the Observation inside it is lost. A rewritten bucket differs
+            # from its old dir by exactly the purged rows: count the footers.
+            new = layout["bucket_paths"]
+            rows_purged = _stored_rows([snap["bucket_paths"][str(b)] for b in todo]) - (
+                _stored_rows([new[str(b)] for b in todo if str(b) in new])
+            )
         if rows_purged == 0:
             shutil.rmtree(
                 os.path.join(self.path, "data", f"snap-{snap_id:06d}"), ignore_errors=True

@@ -274,6 +274,48 @@ def test_commit_job_budget_every_mode(spark, events_path, tmp_path, mode):
     assert not over, f"jobs over ceiling (got, ceiling): {over}; all: {jobs}"
 
 
+def test_point_read_job_budget_every_layout(spark, tmp_path):
+    """``read_key(...).collect()`` schedules at most one Spark job on
+    every layout; a multi-dir MoR snapshot would pay an exchange and a
+    second job if it went through read()'s resolve window."""
+    sc = spark.sparkContext
+    batches = [
+        _batch(spark, [(f"k{i}", "user", f"t{i}.{b}", "I", 10 * b + i) for i in range(6)])
+        for b in range(3)
+    ]
+    tables = {}
+    for mode in ("cow", "mor", "bucketed"):
+        t = tables[mode] = ParquetSnapshotTable(
+            spark, str(tmp_path / mode), mode=mode, n_buckets=4 if mode == "bucketed" else None
+        )
+        for b, df in enumerate(batches if mode == "mor" else batches[:1]):
+            t.merge_into(last_writer_wins(df), batch_id=b)
+    mor_ids = [s["snapshot_id"] for s in tables["mor"].snapshots()]
+    assert [len(s["data_paths"]) for s in tables["mor"].snapshots()] == [1, 2, 3]
+    cases = {
+        "cow": (tables["cow"], None, "t3.0"),
+        "mor 1 dir": (tables["mor"], mor_ids[0], "t3.0"),
+        "mor 3 dirs": (tables["mor"], None, "t3.2"),
+        "mor time travel": (tables["mor"], mor_ids[1], "t3.1"),
+        "bucketed": (tables["bucketed"], None, "t3.0"),
+    }
+    jobs = {}
+    for name, (t, sid, text) in cases.items():
+        group = f"point-read-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = t.read_key("k3", sid).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert [r["text"] for r in rows] == [text], name
+        # the status store is fed by the async listener bus: drain it so
+        # a lagging count cannot pass for a small one
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert all(n <= 1 for n in jobs.values()), jobs
+
+
 def test_empty_table_reads_empty(spark, tmp_path):
     t = ParquetSnapshotTable(spark, str(tmp_path / "nothing"))
     assert t.read().count() == 0

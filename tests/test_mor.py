@@ -135,3 +135,46 @@ def test_expire_snapshots_gc(spark, events_path, tmp_path):
 
     with pytest.raises(ValueError):
         mor.expire_snapshots(keep_last=0)
+
+
+def test_mor_read_key_equals_filtered_read_every_snapshot(spark, tmp_path):
+    """A multi-dir MoR point read resolves its key on the driver, not
+    through read()'s window; for every key and every retained snapshot it
+    must return exactly read(sid).filter(conv_id == key), schema included."""
+    import datetime
+
+    from kafka_plugins_spark.schema import CHANGE_EVENT
+
+    ts = datetime.datetime(2026, 1, 1)
+
+    def batch(rows):
+        return spark.createDataFrame(
+            [(c, turn, "user", text, None, ts, op, 0, off) for c, turn, text, op, off in rows],
+            CHANGE_EVENT,
+        )
+
+    table = ParquetSnapshotTable(spark, str(tmp_path / "t"), mode="mor")
+    table.merge_into(batch([("k1", 0, "a", "I", 10), ("k1", 1, "b", "I", 11),
+                            ("k2", 0, "c", "I", 12), ("k3", 0, "d", "I", 13)]), batch_id=0)
+    table.merge_into(batch([("k1", 0, "stale", "U", 5),  # later delta, lower offset: loses
+                            ("k2", 0, None, "D", 14),  # tombstone
+                            ("k4", 0, "e", "I", 15)]), batch_id=1)
+    table.merge_into(batch([("k2", 0, "c2", "I", 16),  # re-insert after the tombstone
+                            ("k3", 0, None, "D", 17)]), batch_id=2)
+    table.merge_into(  # a column added in the last delta
+        batch([("k1", 1, "b2", "U", 18)]).withColumn("model", F.lit("m-1")), batch_id=3
+    )
+    assert len(table.current_snapshot()["data_paths"]) == 4
+
+    got = {(r["conv_id"], r["turn_idx"]): (r["text"], r["model"])
+           for r in table.read_key("k1").collect() + table.read_key("k2").collect()}
+    assert got == {("k1", 0): ("a", None), ("k1", 1): ("b2", "m-1"), ("k2", 0): ("c2", None)}
+    assert table.read_key("k3").collect() == []
+
+    for sid in [s["snapshot_id"] for s in table.snapshots()]:
+        full = table.read(sid)
+        for key in ("k1", "k2", "k3", "k4", "absent"):
+            df = table.read_key(key, sid)
+            assert df.schema == full.schema, (sid, key)
+            want = full.filter(F.col("conv_id") == key).collect()
+            assert sorted(df.collect()) == sorted(want), (sid, key)

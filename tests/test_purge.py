@@ -327,3 +327,21 @@ def test_gc_interleaving_never_strands_a_retained_snapshot(spark, tmp_path, seed
     # final state agrees with the surviving key set
     got = {r["conv_id"] for r in table.read().collect()}
     assert got == alive
+
+
+def test_read_after_purging_every_key_keeps_evolved_schema(spark, tmp_path):
+    """Purging every key empties a bucketed manifest; read() of that
+    snapshot must still carry the columns the table evolved to. The purge
+    itself must count its rows although no row survives the rewrite."""
+    table = ParquetSnapshotTable(spark, str(tmp_path / "t"), mode="bucketed", n_buckets=4)
+    table.merge_into(last_writer_wins(_batch(spark, [("k1", "user", "a", "I", 0)])), batch_id=0)
+    table.merge_into(
+        last_writer_wins(
+            _batch(spark, [("k2", "user", "b", "I", 1)]).withColumn("model", F.lit("m-1"))
+        ),
+        batch_id=1,
+    )
+    assert table.purge_keys(["k1", "k2"])["rows_purged"] == 2
+    assert table.current_snapshot()["bucket_paths"] == {}
+    df = table.read()
+    assert "model" in df.columns and df.count() == 0
