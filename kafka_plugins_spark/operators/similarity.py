@@ -16,16 +16,16 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _sq_norm(v: Column) -> Column:
     return F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-
-
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("_norm", F.sqrt(_sq_norm(F.col(vec_col))))
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -107,12 +107,6 @@ def _norm_col(vec_col: str, dim: int | None = None) -> Column:
     if dim is not None:
         return F.sqrt(_sq_norm_fixed(vec_col, dim))
     return F.sqrt(_sq_norm(F.col(vec_col)))
-
-
-def _pair_dot(a: str, b: str, dim: int | None) -> Column:
-    """The per-pair dot over named columns: unrolled when the
-    dimensionality is known."""
-    return dot_fixed(a, b, dim) if dim is not None else dot(F.col(a), F.col(b))
 
 
 def brute_force_topk(
@@ -280,33 +274,81 @@ def train_ivf_centroids(
         for i in range(dim)
     ]
     for _ in range(n_iters):
-        assigned = emb.withColumn("_cell", ivf_cell_ranking(vec_col, cents).getItem(0))
-        rows = assigned.groupBy("_cell").agg(F.count("*").alias("_n"), *scaled).collect()
+        assigned = _rank_cells(emb.select(vec_col), vec_col, cents, 1)
+        rows = assigned.groupBy("_home").agg(F.count("*").alias("_n"), *scaled).collect()
         new = [list(c) for c in cents]
         for r in rows:
             v = [(r[f"s{i}"] / r["_n"]) / IVF_SCALE for i in range(dim)]
             nrm = math.sqrt(sum(x * x for x in v))
             if nrm > 0:
-                new[r["_cell"]] = [x / nrm for x in v]
+                new[r["_home"]] = [x / nrm for x in v]
         cents = new
     return cents
 
 
-def ivf_cell_ranking(vec_col: str, centroids: list[list[float]]) -> Column:
-    """Array of cell ids ordered by descending dot(vec, centroid)
-    (ties → smaller cell id). Element 0 is the home cell; the first
-    nprobe elements are the probe set."""
-    scored = F.array(
-        *[
-            F.struct(
-                _dot_lit(vec_col, cent).alias("d"),
-                F.lit(-cid).alias("nc"),
+def _matrix(vectors: pa.Array, dim: int) -> np.ndarray:
+    """A list column as an (n, dim) float64 matrix. A NULL vector or
+    element reads as NaN (Spark makes each dot it enters NULL): either
+    way the vector ties on every cell and passes no score threshold.
+    Any other vector must have exactly ``dim`` elements (``ValueError``)."""
+    if pc.any(pc.not_equal(pc.list_value_length(vectors), dim)).as_py():
+        raise ValueError(f"every embedding vector must have exactly {dim} elements")
+    out = np.full((len(vectors), dim), np.nan)
+    out[np.asarray(vectors.is_valid())] = np.asarray(vectors.flatten(), np.float64).reshape(-1, dim)
+    return out
+
+
+def _fold_dot(a: np.ndarray, b: np.ndarray, ia: np.ndarray, ib: np.ndarray) -> np.ndarray:
+    """``a[:, ia[k]] · b[:, ib[k]]`` for every k over dimension-major
+    matrices, as the left fold ``((0.0 + x0·y0) + x1·y1) + …``: the same
+    rounded multiply-then-add sequence (no FMA) as :func:`dot` and
+    :func:`dot_fixed`, so every value is bit-identical to Spark's."""
+    acc = np.zeros(len(ia))
+    for x, y in zip(a, b):
+        acc += x[ia] * y[ib]
+    return acc
+
+
+def _rank_cells(
+    df: DataFrame, vec_col: str, centroids: list[list[float]], nprobe: int
+) -> DataFrame:
+    """``df`` plus ``_home`` (int) and ``_probes`` (array<int>: the
+    ``nprobe`` best cells, best first), ranked per Arrow batch
+    (``mapInArrow``) by the :func:`_fold_dot` centroid dot, descending,
+    ties to the smaller cell id — the oracles' ``ranked`` CTE order. A
+    NaN dot ranks above every number, as Spark and DuckDB sort it.
+    Centroids must be finite (``ValueError``); vectors see :func:`_matrix`."""
+    cents = np.asarray(centroids, dtype=np.float64)
+    if not np.isfinite(cents).all():
+        # a non-finite centroid means the embeddings feeding the trainer
+        # were already poisoned
+        raise ValueError("_rank_cells: centroids contain non-finite values")
+    n_cells, dim = cents.shape
+    k = min(nprobe, n_cells)
+    schema = T.StructType([
+        *df.schema.fields,
+        T.StructField("_home", T.IntegerType()),
+        T.StructField("_probes", T.ArrayType(T.IntegerType())),
+    ])
+
+    def rank(batches):
+        for batch in batches:
+            n = batch.num_rows
+            d = _fold_dot(
+                _matrix(batch.column(vec_col), dim).T, cents.T,
+                np.repeat(np.arange(n), n_cells), np.tile(np.arange(n_cells), n),
+            ).reshape(n, n_cells)
+            # stable, and the LAST key is the primary one
+            order = np.lexsort((-d, ~np.isnan(d))).astype(np.int32)
+            probes = pa.ListArray.from_arrays(
+                pa.array(np.arange(n + 1, dtype=np.int32) * k), pa.array(order[:, :k].ravel())
             )
-            for cid, cent in enumerate(centroids)
-        ]
-    )
-    ranked = F.reverse(F.array_sort(scored))  # desc by (d, -cid) ⇒ ties pick smaller cid
-    return F.transform(ranked, lambda s: -s["nc"])
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, pa.array(order[:, 0]), probes],
+                names=[*batch.schema.names, "_home", "_probes"],
+            )
+
+    return df.mapInArrow(rank, schema)
 
 
 def ann_ivf_topk(
@@ -329,23 +371,18 @@ def ann_ivf_topk(
     pass ``centroids`` from :func:`train_ivf_centroids`). Recall < 1 by
     construction — the nprobe dial trades recall for touched cells."""
     cents = centroids if centroids is not None else ivf_centroids(n_cells, dim)
-    ranking = ivf_cell_ranking(vec_col, cents)
-    bucketed = emb.withColumn("_cell", ranking.getItem(0))
-    q = (
-        emb.filter(F.col(id_col) < n_queries)
-        .withColumn("_probes", F.slice(ranking, 1, nprobe))
-        .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("_qv"),
-            _norm_col(vec_col, dim).alias("_qn"),
-            F.explode("_probes").alias("_cell"),
-        )
+    ranked = _rank_cells(emb.select(id_col, vec_col), vec_col, cents, nprobe)
+    q = ranked.filter(F.col(id_col) < n_queries).select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("_qv"),
+        _norm_col(vec_col, dim).alias("_qn"),
+        F.explode("_probes").alias("_cell"),
     )
-    c = bucketed.select(
+    c = ranked.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cv"),
         _norm_col(vec_col, dim).alias("_cn"),
-        "_cell",
+        F.col("_home").alias("_cell"),
     )
     scored = (
         c.join(F.broadcast(q), "_cell")
@@ -360,35 +397,6 @@ def ann_ivf_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "score", "rank")
-    )
-
-
-def _verify_cosine(
-    cands: DataFrame,
-    emb: DataFrame,
-    threshold: float,
-    vec_col: str,
-    id_col: str,
-    dim: int | None = None,
-) -> DataFrame:
-    """Exact rounded-cosine verification of candidate (id_a, id_b) pairs.
-    Norms ride the per-vector side of the join (see :func:`_norm_col`);
-    with ``dim`` the per-pair dot unrolls into codegen (bit-identical)."""
-    a = emb.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"), _norm_col(vec_col, dim).alias("_na")
-    )
-    b = emb.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"), _norm_col(vec_col, dim).alias("_nb")
-    )
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "score",
-            F.round(_pair_dot("_va", "_vb", dim) / (F.col("_na") * F.col("_nb")), 4),
-        )
-        .filter(F.col("score") >= threshold)
-        .select("id_a", "id_b", "score")
     )
 
 
@@ -531,7 +539,23 @@ def embedding_neardup_pairs(
     cands = neardup_grid_candidates(emb, threshold, dim, k, vec_col=vec_col, id_col=id_col)
     if candidate_obs is not None:
         cands = cands.observe(candidate_obs, F.count(F.lit(1)).alias("n_candidates"))
-    return _verify_cosine(cands, emb, threshold, vec_col, id_col, dim=dim)
+    # exact rounded-cosine verify; norms ride the per-vector side of the
+    # join (see _norm_col) and the per-pair dot is unrolled (dot_fixed)
+    a = emb.select(
+        F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"), _norm_col(vec_col, dim).alias("_na")
+    )
+    b = emb.select(
+        F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"), _norm_col(vec_col, dim).alias("_nb")
+    )
+    return (
+        cands.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn(
+            "score", F.round(dot_fixed("_va", "_vb", dim) / (F.col("_na") * F.col("_nb")), 4)
+        )
+        .filter(F.col("score") >= threshold)
+        .select("id_a", "id_b", "score")
+    )
 
 
 def embedding_neardup_pairs_ivf(
@@ -553,34 +577,27 @@ def embedding_neardup_pairs_ivf(
     recall-1 blocking admits ~all pairs, so the scale path trades recall
     for a bounded candidate set. Candidates are pairs sharing an IVF
     cell — (a, b) survives iff b's home cell is among a's ``nprobe``
-    nearest cells or vice versa — then verified with the exact rounded
-    cosine, so false positives are impossible and output ⊆ the all-pairs
-    result. ``nprobe = n_cells`` degenerates to exact (every pair is a
-    candidate). At scale the cell is a partition/cluster key: the
-    candidate join is a plain equi-join touching each cell's files only,
-    and a trained (k-means) codebook replaces the deterministic one
-    (pass ``centroids`` from :func:`train_ivf_centroids`).
+    nearest cells or vice versa (:func:`_rank_cells`) — scored with the
+    exact rounded cosine of :func:`embedding_neardup_pairs_exact`, so
+    output ⊆ the all-pairs result; ``nprobe = n_cells`` is exact. At
+    scale the cell is a partition/cluster key and a trained codebook
+    replaces the deterministic one (``centroids`` from
+    :func:`train_ivf_centroids`).
 
-    Contract (hot path): ``id_col`` must be integral (emitted as long —
-    the declared cogroup schema) and every vector exactly ``dim``
-    elements; violations fail the stage loudly. The pure-expression
-    observed path below shares the integral-id expectation through the
-    same verify join.
+    Contract: ``id_col`` integral (emitted as long) and every vector
+    exactly ``dim`` elements, else the stage fails (``ValueError``).
+    Rows with a NULL id or vector are dropped; a vector with a NULL, NaN
+    or infinite element, or a zero vector, is in no pair.
 
     ``candidate_obs``: optional ``pyspark.sql.Observation`` recording
     ``n_candidates`` — the number of DISTINCT pairs the blocking admits,
-    the cost driver of this operator: a trained codebook balances cells,
-    and balanced cells can admit MORE pairs than lopsided ones at the
-    same nprobe, trading verify cost for recall. Observe it to attribute
-    wall-time shifts to candidate volume vs host weather. The observed
-    variant streams every co-occurrence once (counting each admitted
-    pair exactly once via a canonical-direction rule — no O(candidates)
-    distinct exchange) and re-derives the result rows by joining the
-    candidate stream against the hot path's verified output. Both paths
-    return the identical rows.
+    the cost driver of this operator (a trained codebook balances cells,
+    and balanced cells can admit MORE pairs at the same nprobe). Observe
+    it to attribute wall-time shifts to candidate volume vs host
+    weather. That variant counts every co-occurrence once and returns
+    the same rows as the hot path.
     """
     cents = centroids if centroids is not None else ivf_centroids(n_cells, dim)
-    ranking = ivf_cell_ranking(vec_col, cents)
     if candidate_obs is not None:
         # Capacity-accounting path. A pair can arrive by ≤2 directions
         # (a probes b's home cell / b probes a's home cell); instead of
@@ -588,18 +605,19 @@ def embedding_neardup_pairs_ivf(
         # admitted pair: drop direction (a→b) iff the reverse direction
         # also exists (home(a) ∈ probes(b)) and id_a > id_b. The count
         # of surviving rows is exactly |distinct candidates|; the result
-        # rows come from an inner join against the hot path's verified
-        # output (every verified pair is a candidate by construction),
-        # so the returned rows are identical to the unobserved path.
-        home = emb.select(
+        # rows come from an inner join against the hot path's output
+        # (every output pair is a candidate). Both sides grow with the
+        # pair count, so neither is forced to broadcast.
+        ranked = _rank_cells(emb.select(id_col, vec_col), vec_col, cents, nprobe)
+        home = ranked.select(
             F.col(id_col).alias("id_b"),
-            ranking.getItem(0).alias("_cell"),
-            F.slice(ranking, 1, nprobe).alias("_probes_b"),
+            F.col("_home").alias("_cell"),
+            F.col("_probes").alias("_probes_b"),
         )
-        probes = emb.select(
+        probes = ranked.select(
             F.col(id_col).alias("id_a"),
-            ranking.getItem(0).alias("_home_a"),
-            F.explode(F.slice(ranking, 1, nprobe)).alias("_cell"),
+            F.col("_home").alias("_home_a"),
+            F.explode("_probes").alias("_cell"),
         )
         cands = (
             probes.join(home, "_cell")
@@ -617,103 +635,83 @@ def embedding_neardup_pairs_ivf(
         verified = embedding_neardup_pairs_ivf(
             emb, threshold, dim, n_cells, nprobe, vec_col, id_col, centroids=cents
         )
-        return cands.join(F.broadcast(verified), ["id_a", "id_b"]).select(
-            "id_a", "id_b", "score"
-        )
+        return cands.join(verified, ["id_a", "id_b"]).select("id_a", "id_b", "score")
 
-    # Hot path (guide §4.2 shape: Spark distributes, a vectorized native
-    # library does the per-batch math). The O(n²/cells) co-occurrence set
-    # is never materialized as rows at all: probes and homes are cogrouped
-    # by their Spark-computed (cell, salt) key and each group is scored as
-    # ONE numpy/BLAS matrix product over unit vectors, emitting only the
-    # pairs above a CONSERVATIVE prefilter threshold. The cogroup crosses
-    # the Python boundary as ARROW TABLES (applyInArrow), not pandas: the
-    # embedding column arrives as a ListArray whose flat values buffer
-    # reshapes straight into the (n, dim) matrix — the pandas form
-    # materialized 240k per-row numpy objects and np.stack'ed them, which
-    # dominated the stage (measured r7 at sf1sim: 5-7 s pandas vs
-    # 1.8-2.4 s Arrow for the identical 202,900 emitted pairs). Every
-    # semantic decision stays in Spark expressions:
-    #   - cell assignment / probe sets come from the same ivf_cell_ranking
-    #     expression as before (bit-exact), evaluated BEFORE the shuffle —
-    #     the cogroup key IS the blocking, so membership is structural;
-    #   - the prefilter threshold is threshold − 5e-5 − 1e-9: 5e-5 covers
-    #     the round(·,4) boundary (round(x,4) ≥ t admits x ≥ t−5e-5) and
-    #     1e-9 dwarfs the ~1e-13 worst-case BLAS-reassociation +
-    #     unitization FP difference vs the exact fold → NO false
-    #     negatives; false positives are killed by the exact verify;
-    #   - survivors (the near-pairs only, a vanishing fraction) get the
-    #     exact rounded-cosine score from _verify_cosine — the identical
-    #     expressions as the legacy path, so results are bit-identical.
+    # Hot path: Spark distributes, numpy/BLAS does the per-group math.
+    # Probes and homes are cogrouped by (cell, salt), so the O(n²/cells)
+    # co-occurrence set is never rows, and each group arrives as ARROW
+    # tables (applyInArrow: the embedding ListArray reshapes straight into
+    # a matrix; pandas' per-row objects cost 5-7 s vs 1.8-2.4 s at sf1sim).
+    # Per group, one BLAS product over unit vectors prefilters at
+    # threshold − 5e-5 − 1e-9 (5e-5: round(x,4) ≥ t admits x ≥ t−5e-5;
+    # 1e-9 dwarfs the ~1e-13 BLAS-reassociation + unitization error vs
+    # the fold → no false negatives), and only its survivors get the raw
+    # cosine from _fold_dot. round(·,4), the threshold and the distinct
+    # stay in Spark, so the rounding is Spark's own. As Spark expressions
+    # (eight unrolled 64-term literal dots, two verify joins) the ranking
+    # and the score cost ~0.8 s of Catalyst analysis and planning per
+    # query on the 500-vector curate slice.
     # The salt splits each cell's probe side so one hot cell cannot pin
     # the stage to one task; the home side is replicated per salt (cells
     # are small relative to the pair count this avoids).
-    import numpy as np
-    import pyarrow as pa
-
     spark = emb.sparkSession
     n_salts = max(4, (2 * spark.sparkContext.defaultParallelism) // max(n_cells, 1))
     prefilter_thr = threshold - 5e-5 - 1e-9
 
     clean = emb.filter(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull())
-    probes = clean.select(
+    ranked = _rank_cells(clean.select(id_col, vec_col), vec_col, cents, nprobe)
+    probes = ranked.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_v"),
-        F.explode(F.slice(ranking, 1, nprobe)).alias("_cell"),
+        F.explode("_probes").alias("_cell"),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)).cast("int").alias("_salt"),
     )
-    homes = clean.select(
+    homes = ranked.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_v"),
-        ranking.getItem(0).alias("_cell"),
+        F.col("_home").alias("_cell"),
         F.explode(F.array(*[F.lit(s) for s in range(n_salts)])).alias("_salt"),
     )
 
-    out_schema = pa.schema([("id_a", pa.int64()), ("id_b", pa.int64())])
+    out_schema = pa.schema([("id_a", pa.int64()), ("id_b", pa.int64()), ("cos", pa.float64())])
 
     def _score_group(left: pa.Table, right: pa.Table) -> pa.Table:
         if left.num_rows == 0 or right.num_rows == 0:
             return out_schema.empty_table()
-        pa_ids = (
-            left.column("_id").combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-        )
-        hb_ids = (
-            right.column("_id").combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-        )
-        # ListArray flat-values buffer → (n, dim) matrix, no per-row objects
-        # (float32 → float64 is exact, same values as the pandas np.stack)
-        P = np.asarray(left.column("_v").combine_chunks().flatten(), dtype=np.float64).reshape(
-            left.num_rows, dim
-        )
-        H = np.asarray(right.column("_v").combine_chunks().flatten(), dtype=np.float64).reshape(
-            right.num_rows, dim
-        )
-        pn = np.sqrt((P * P).sum(axis=1))
-        hn = np.sqrt((H * H).sum(axis=1))
-        np.divide(P, pn[:, None], out=P, where=pn[:, None] > 0)
-        np.divide(H, hn[:, None], out=H, where=hn[:, None] > 0)
-        outs_a, outs_b = [], []
+        pa_ids, hb_ids = left.column("_id").to_numpy(), right.column("_id").to_numpy()
+        P = _matrix(left.column("_v").combine_chunks(), dim)
+        H = _matrix(right.column("_v").combine_chunks(), dim)
+        rows_p, rows_h = np.arange(len(P)), np.arange(len(H))
+        pn = np.sqrt(_fold_dot(P.T, P.T, rows_p, rows_p))
+        hn = np.sqrt(_fold_dot(H.T, H.T, rows_h, rows_h))
+        # unit vectors; a zero row stays zero and a NaN row NaN
+        Pu = P / np.where(pn > 0, pn, 1.0)[:, None]
+        Hu = H / np.where(hn > 0, hn, 1.0)[:, None]
+        outs = []
         # slab the matmul so one giant cell cannot blow task memory
         slab = max(1, int(64 * 1024 * 1024 // (8 * max(left.num_rows, 1))))
         for lo in range(0, right.num_rows, slab):
-            G = P @ H[lo : lo + slab].T
-            ii, jj = np.nonzero(G >= prefilter_thr)
-            if len(ii):
-                ga, gb = pa_ids[ii], hb_ids[lo + jj]
-                m = ga != gb
-                outs_a.append(np.minimum(ga[m], gb[m]))
-                outs_b.append(np.maximum(ga[m], gb[m]))
-        if not outs_a:
+            ii, jj = np.nonzero(Pu @ Hu[lo : lo + slab].T >= prefilter_thr)
+            jj += lo
+            ga, gb = pa_ids[ii], hb_ids[jj]
+            den = pn[ii] * hn[jj]
+            m = (ga != gb) & (den != 0)  # Spark's x / 0 is NULL: no pair
+            if m.any():
+                cos = _fold_dot(P.T, H.T, ii[m], jj[m]) / den[m]
+                outs.append((np.minimum(ga[m], gb[m]), np.maximum(ga[m], gb[m]), cos))
+        if not outs:
             return out_schema.empty_table()
-        return pa.table({"id_a": np.concatenate(outs_a), "id_b": np.concatenate(outs_b)})
+        id_a, id_b, cos = (np.concatenate(c) for c in zip(*outs))
+        return pa.table({"id_a": id_a, "id_b": id_b, "cos": cos}, schema=out_schema)
 
-    cands = (
+    return (
         probes.groupBy("_cell", "_salt")
         .cogroup(homes.groupBy("_cell", "_salt"))
-        .applyInArrow(_score_group, "id_a long, id_b long")
+        .applyInArrow(_score_group, "id_a long, id_b long, cos double")
+        .select("id_a", "id_b", F.round("cos", 4).alias("score"))
+        .filter(F.col("score") >= threshold)
         .distinct()
     )
-    return _verify_cosine(cands, emb, threshold, vec_col, id_col, dim=dim)
 
 
 def knn_label_vote(

@@ -106,6 +106,22 @@ def test_emb_neardup_no_cartesian(spark):
     assert "BroadcastNestedLoop" not in plan
 
 
+def test_emb_neardup_ivf_plan_has_no_dot_chain(spark):
+    """IVF near-dup ranks cells and scores pairs in its Arrow kernels: the
+    plan is cogroup-blocked (no cartesian, no row-wise Python) and its
+    optimized form carries no unrolled literal dot chain — at 8 cells ×
+    64 dims those multiplications (~1,300) cost the query ~0.8 s of
+    analysis and planning."""
+    from kafka_plugins_spark.operators.similarity import embedding_neardup_pairs_ivf
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    df = embedding_neardup_pairs_ivf(emb, threshold=0.45, dim=64, n_cells=8, nprobe=4)
+    plan = plan_of(df)
+    for node in ("CartesianProduct", "BroadcastNestedLoop", "BatchEvalPython"):
+        assert node not in plan
+    assert df._jdf.queryExecution().optimizedPlan().toString().count(" * ") < 16
+
+
 def test_emb_neardup_grid_matches_exact(spark):
     """The grid blocking is EXACT (recall 1 by Cauchy–Schwarz), not
     probabilistic: identical pair set as the all-pairs cross join."""

@@ -2,6 +2,7 @@
 plan shapes (broadcast, Arrow-only Python), multimodal plumbing."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_plugins_spark.operators.dedup import (
@@ -278,6 +279,159 @@ def test_trained_ivf_beats_untrained_on_clustered_corpus(spark):
     r_trained = recall(trained)
     assert r_trained >= r_untrained, (r_trained, r_untrained)
     assert r_trained >= 0.9, f"trained codebook should align with clusters: {r_trained}"
+
+
+def _expr_ranking(vec_col, centroids):
+    """Reference cell ranking as a Spark expression: the structs
+    (unrolled literal dot, -cell) sorted by ``array_sort`` and reversed,
+    i.e. Spark's own NULL/NaN/±inf ordering, ties to the smaller cell."""
+    from kafka_plugins_spark.operators.similarity import _dot_lit
+
+    scored = F.array(*[
+        F.struct(_dot_lit(vec_col, c).alias("d"), F.lit(-cid).alias("nc"))
+        for cid, c in enumerate(centroids)
+    ])
+    return F.transform(F.reverse(F.array_sort(scored)), lambda s: -s["nc"])
+
+
+def _arrow_ranking(df, centroids):
+    from kafka_plugins_spark.operators.similarity import _rank_cells
+
+    ranked = _rank_cells(df.select("vec_id", "embedding"), "embedding", centroids, len(centroids))
+    rows = ranked.select("vec_id", "_home", "_probes").collect()
+    assert all(r["_home"] == r["_probes"][0] for r in rows)
+    return {r["vec_id"]: list(r["_probes"]) for r in rows}
+
+
+def _codebooks():
+    from kafka_plugins_spark.operators.similarity import ivf_centroids
+
+    md5 = ivf_centroids(8, 64)
+    # cells 2/4 duplicate cells 0/1: every vector ties on those pairs
+    return {"md5": md5, "dup": [md5[0], md5[1], md5[0], md5[3], md5[1], *md5[5:]]}
+
+
+def _special_vectors(spark):
+    """Non-finite and degenerate rows (ids ≥ 100001) around one finite
+    near-duplicate pair (100009, 100010)."""
+    nan, inf = float("nan"), float("inf")
+    base = [0.1 * ((i * 7) % 13 - 6) for i in range(64)]
+
+    def put(i, v):
+        return base[:i] + [v] + base[i + 1:]
+
+    rows = [
+        (100001, put(3, None)), (100002, put(5, nan)), (100003, put(0, inf)),
+        (100004, put(9, -inf)), (100005, None), (100006, [0.0] * 64),
+        (100007, put(0, inf)[:1] + [-inf] + base[2:]), (100008, [inf] * 32 + [-inf] * 32),
+        (100009, base), (100010, [x * 1.0001 for x in base]), (None, base),
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_ivf_ranker_matches_oracle_ranked_order(spark, sf):
+    """The Arrow ranker orders every vector's cells exactly as the DuckDB
+    oracles' ``ranked`` CTE (dot DESC, cell ASC): for the trained codebook
+    (the emb_neardup_ivf oracle, which re-derives it in SQL, cut at
+    ``ranked``), the md5 codebook and one with duplicated centroids."""
+    import duckdb
+
+    from kafka_plugins_spark import entry_queries as eq
+
+    path = f"/root/testdata/{sf}"
+    e = spark.read.parquet(f"{path}/embeddings.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}/embeddings.parquet'")
+    oracle = eq._emb_neardup_ivf_oracle_sql()
+    head = oracle[: oracle.index("home AS (")].rstrip().rstrip(",")
+    ranked_ctes = head[head.index("cscore AS ("):]
+    select = " SELECT vec_id, list(cid ORDER BY rn) AS r FROM ranked GROUP BY vec_id"
+
+    def duck(sql):
+        return {int(v): list(r) for v, r in con.execute(sql + select).fetchall()}
+
+    assert _arrow_ranking(e, eq._trained_codebook(spark, path)) == duck(head)
+    for cents in _codebooks().values():
+        values = ", ".join(
+            f"({cid}, [{', '.join(repr(x) for x in c)}]::DOUBLE[])" for cid, c in enumerate(cents)
+        )
+        want = duck(f"WITH cents(cid, v) AS (VALUES {values}), {ranked_ctes}")
+        assert _arrow_ranking(e, cents) == want
+
+
+def test_ivf_ranker_non_finite_rows_match_spark_ordering(spark):
+    """NULL/NaN/±inf elements, a NULL vector and a zero vector rank as
+    Spark's own expression ranks them (NaN above every number, an all-NULL
+    or all-NaN dot row in cell order); a vector of the wrong length and a
+    non-finite centroid fail loudly."""
+    from pyspark.errors import PythonException
+
+    from kafka_plugins_spark.operators.similarity import _rank_cells
+
+    sp = _special_vectors(spark)
+    for cents in _codebooks().values():
+        rows = sp.select("vec_id", _expr_ranking("embedding", cents).alias("rk")).collect()
+        want = {r.vec_id: list(r.rk) for r in rows}
+        assert _arrow_ranking(sp, cents) == want
+    assert want[100001] == want[100002] == want[100005] == list(range(8))
+
+    short = spark.createDataFrame([(1, [0.5] * 63)], "vec_id long, embedding array<float>")
+    with pytest.raises(PythonException, match="exactly 64 elements"):
+        _arrow_ranking(short, _codebooks()["md5"])
+    bad = [list(c) for c in _codebooks()["md5"]]
+    bad[3][7] = float("nan")
+    with pytest.raises(ValueError, match="non-finite"):
+        _rank_cells(sp, "embedding", bad, 4)
+
+
+def test_neardup_ivf_paths_match_oracle_exactly(spark):
+    """At sf0.01 the hot path, the candidate-observing path and the DuckDB
+    oracle return the same (id_a, id_b, score) rows, scores compared
+    exactly, and the observed candidate count equals the oracle's. With
+    non-finite rows added, both paths still agree, no such row is in a
+    pair, and the count equals the candidate pairs of Spark's own
+    expression ranking."""
+    import duckdb
+    import numpy as np
+    from pyspark.sql import Observation
+
+    from kafka_plugins_spark import entry_queries as eq
+    from kafka_plugins_spark.operators.similarity import embedding_neardup_pairs_ivf
+
+    path = "/root/testdata/sf0.01"
+    e = spark.read.parquet(f"{path}/embeddings.parquet").select("vec_id", "embedding")
+    cents = eq._trained_codebook(spark, path)
+    params = eq.EMB_NEARDUP_IVF_PARAMS
+
+    def both(df):
+        obs = Observation()
+        hot = embedding_neardup_pairs_ivf(df, centroids=cents, **params).collect()
+        seen = embedding_neardup_pairs_ivf(
+            df, centroids=cents, candidate_obs=obs, **params
+        ).collect()
+        assert sorted(map(tuple, hot)) == sorted(map(tuple, seen))
+        return {tuple(r) for r in hot}, obs.get["n_candidates"]
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{path}/embeddings.parquet'")
+    oracle = eq._emb_neardup_ivf_oracle_sql()
+    got, n_cands = both(e)
+    assert got == {tuple(r) for r in con.execute(oracle).fetchall()} and got
+    head = oracle[: oracle.rindex("SELECT id_a, id_b, score FROM (")]
+    assert n_cands == con.execute(head + "SELECT count(*) FROM cand").fetchone()[0]
+
+    mixed = e.unionByName(_special_vectors(spark))
+    got_mixed, n_mixed = both(mixed)
+    assert {r for r in got_mixed if max(r[:2]) > 100000} == {(100009, 100010, 1.0)}
+    assert {r for r in got_mixed if max(r[:2]) <= 100000} == got
+    rk = mixed.filter("vec_id IS NOT NULL").select(
+        "vec_id", _expr_ranking("embedding", cents).alias("rk")
+    ).collect()
+    home = np.array([r.rk[0] for r in rk])
+    probes = np.array([r.rk[: params["nprobe"]] for r in rk])
+    admits = (probes[:, :, None] == home[None, None, :]).any(axis=1)  # [a, b]: a probes home(b)
+    assert n_mixed == int(np.triu(admits | admits.T, k=1).sum())
 
 
 def test_dedup_clusters_chains_and_singletons(spark):
