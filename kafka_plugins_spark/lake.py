@@ -253,6 +253,33 @@ def _stored_rows(paths: list[str]) -> int:
     )
 
 
+def _data_files(paths: list[str]) -> dict[str, int]:
+    """Data file → size in bytes, for the files directly under ``paths``
+    that a Spark scan reads (names starting with ``.`` or ``_`` — CRCs,
+    ``_SUCCESS`` — are skipped, as Spark's file index skips them)."""
+    out = {}
+    for p in paths:
+        with os.scandir(p) as it:
+            for e in it:
+                if not e.name.startswith((".", "_")) and e.is_file():
+                    out[e.path] = e.stat().st_size
+    return out
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable: the type a
+    Spark file scan under an explicit schema reports."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
 def _with_system_columns(payload: T.StructType) -> T.StructType:
     return T.StructType(list(payload.fields) + SYSTEM_FIELDS)
 
@@ -620,9 +647,11 @@ class ParquetSnapshotTable:
       wins across delta files (one shuffle by key) until :meth:`compact`
       folds them; a point read (:meth:`read_key`) skips the shuffle and
       resolves its one conversation on the driver from a single scan of
-      every delta dir. Right for the realistic CDC shape: a long stream of
-      small commits where CoW's per-commit rewrite is the scale killer
-      (N commits cost O(N·table) writes vs O(events) + one compact).
+      every delta dir — in-process with pyarrow, no Spark job, while the
+      snapshot's files fit in one scan split (CoW point reads too). Right
+      for the realistic CDC shape: a long stream of small commits where
+      CoW's per-commit rewrite is the scale killer (N commits cost
+      O(N·table) writes vs O(events) + one compact).
       This mirrors Iceberg's MoR position-delete/equality-delete design.
     - ``mode="bucketed"`` (hash-bucketed copy-on-write): stored rows are
       split into ``n_buckets`` dirs by :func:`_bucket_col`; a commit
@@ -903,25 +932,31 @@ class ParquetSnapshotTable:
         )
 
     def read_key(self, conv_id: str, snapshot_id: int | None = None) -> DataFrame:
-        """Point lookup: every visible turn of one conversation, one Spark
-        job at most. What is read depends on the snapshot's layout:
+        """Point lookup: every visible turn of one conversation. What is
+        read, and where, depends on the snapshot's layout:
 
         - bucketed: ONE bucket dir — the manifest prunes the other
           ``n_buckets − 1`` before Spark ever lists a file, so a point
-          read against a 100 TB table touches a few GB. Lazy.
-        - cow, or mor with a single dir: ``read().filter(...)``, a scan
-          of every file with ``conv_id == key`` pushed into the parquet
-          reader. Rows are hash-distributed, so each row group's
-          ``conv_id`` min/max spans the key range and prunes nothing:
-          every stored row is read to return one conversation's. Lazy.
-        - mor with several delta dirs: the same pushed-down scan over
-          every dir, run at CALL time as one job collected to Arrow; the
-          per-key last-writer-wins resolve (max ``_offset``) and the
-          tombstone filter run on the driver over that one
-          conversation's rows, and the result is a local frame (its
-          ``collect`` schedules no job). :meth:`read`'s resolve would
-          instead run a ``row_number`` window across the whole table —
-          an exchange and a second job per lookup.
+          read against a 100 TB table touches a few GB. A lazy Spark
+          scan with ``conv_id == key`` pushed into the parquet reader;
+          its ``collect`` is one job.
+        - cow, and mor with any number of delta dirs (current or time
+          travel): the key's stored rows of every data file, read at CALL
+          time into Arrow. If the snapshot's data files total at most
+          ``spark.sql.files.maxPartitionBytes`` — the bytes Spark would
+          give ONE scan task — an in-process ``pyarrow.dataset`` scan
+          reads them on the driver and no Spark job is scheduled; above
+          that bound one key-pushed Spark scan runs in parallel and is
+          collected with ``toArrow()`` (one job), so what the driver
+          scans stays bounded by one split. Either way the per-key
+          last-writer-wins resolve (max ``_offset``) and the tombstone
+          filter run on the driver over that one conversation's rows,
+          and the result is a local frame typed like :meth:`read`'s
+          (its ``collect`` schedules no job). Rows are hash-distributed
+          across files, so each row group's ``conv_id`` min/max spans the
+          key range and prunes nothing: every stored row is read to
+          return one conversation's. :meth:`read`'s resolve would instead
+          run a ``row_number`` window across the whole table.
 
         The bucket id is computed with the SAME JVM expression the
         writer used — never a Python reimplementation of xxhash64, whose
@@ -936,44 +971,59 @@ class ParquetSnapshotTable:
             self.current_snapshot() if snapshot_id is None else self.snapshot_by_id(snapshot_id)
         )
         paths = self._snapshot_paths(snap)
-        if self._needs_key_resolve(snap, paths):
-            return self._resolve_key_on_driver(snap, paths, conv_id)
-        base = None
-        if snap is not None and snap.get("bucket_paths"):
-            n = int(snap["n_buckets"])
-            b = _bucket_of(self.spark, conv_id, n)
-            path = snap["bucket_paths"].get(str(b))
-            if path is None:  # bucket never written → key cannot exist
-                return self.spark.createDataFrame([], self._schema_of(snap))
-            stored = _with_system_columns(self._schema_of(snap))
-            payload = [f.name for f in self._schema_of(snap).fields]
-            base = (
-                self.spark.read.schema(stored)
-                .parquet(path)
-                .filter(F.coalesce(F.col("_op") != "D", F.lit(True)))
-                .select(*payload)
-            )
-        if base is None:
-            base = self.read(snapshot_id)
-        return base.filter(F.col("conv_id") == conv_id)
-
-    def _resolve_key_on_driver(self, snap: dict, paths: list[str], conv_id: str) -> DataFrame:
-        """:meth:`read_key` on a multi-dir MoR snapshot: one parallel scan
-        with the key pushed down, no exchange; the :meth:`_read_full`
-        resolve (max ``_offset`` per key) and :meth:`read`'s tombstone
-        filter (a NULL ``_op`` is visible) on the Arrow result. Rows come
-        back ordered by key, under the schema :meth:`read` returns."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         schema = self._schema_of(snap)
-        payload = schema.names
-        scan = (
+        if not paths:
+            return self.spark.createDataFrame([], schema)
+        if not snap.get("bucket_paths"):
+            return self._resolve_key_on_driver(schema, paths, conv_id)
+        n = int(snap["n_buckets"])
+        path = snap["bucket_paths"].get(str(_bucket_of(self.spark, conv_id, n)))
+        if path is None:  # bucket never written → key cannot exist
+            return self.spark.createDataFrame([], schema)
+        return (
             self.spark.read.schema(_with_system_columns(schema))
-            .parquet(*paths)
+            .parquet(path)
+            .filter(F.coalesce(F.col("_op") != "D", F.lit(True)))
+            .select(*schema.names)
             .filter(F.col("conv_id") == conv_id)
         )
-        rows = scan.toArrow()
+
+    def _resolve_key_on_driver(
+        self, schema: T.StructType, paths: list[str], conv_id: str
+    ) -> DataFrame:
+        """:meth:`read_key` on a CoW or MoR snapshot: the key's stored rows
+        as Arrow — from an in-process pyarrow scan when the data files
+        fit in one scan split, else from one key-pushed Spark scan — then
+        the :meth:`_read_full` resolve (max ``_offset`` per key) and
+        :meth:`read`'s tombstone filter (a NULL ``_op`` is visible). Both
+        scans read old files under ``schema``, the snapshot's: columns added
+        later read NULL, ``int→long``/``float→double`` promotions are
+        cast. Rows come back ordered by key, under the schema
+        :meth:`read` returns."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        stored = _with_system_columns(schema)
+        files = _data_files(paths)
+        split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        if sum(files.values()) <= split:
+            # INT96 timestamps (Spark's default) read at µs, as Spark
+            # reads them: at ns, dates past 2262 would overflow
+            fmt = ds.ParquetFileFormat(
+                read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+            )
+            rows = ds.dataset(list(files), schema=to_arrow_schema(stored), format=fmt).to_table(
+                filter=pc.field("conv_id") == conv_id
+            )
+        else:
+            rows = (
+                self.spark.read.schema(stored)
+                .parquet(*paths)
+                .filter(F.col("conv_id") == conv_id)
+                .toArrow()
+            )
         # keys ascending, newest first within a key: each key's first row
         # (lowest index) is its winner, and with use_threads=False the
         # groups come out in that key order
@@ -990,8 +1040,8 @@ class ParquetSnapshotTable:
         # convert a struct column of zero chunks, which is what an empty
         # filter or chunked-index take leaves
         keep = pc.filter(winners, pc.take(visible, winners)).combine_chunks()
-        live = rows.select(payload).take(keep)
-        return self.spark.createDataFrame(live, schema=scan.select(*payload).schema)
+        live = rows.select(schema.names).take(keep)
+        return self.spark.createDataFrame(live, schema=_as_nullable(schema))
 
     def _read_full(self, snap: dict | None = None, buckets: list[int] | None = None) -> DataFrame:
         """Stored rows incl. tombstones + system columns (merge input).

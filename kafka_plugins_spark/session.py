@@ -77,7 +77,15 @@ def get_spark(
         # try-semantics used by the oracle comparisons.
         .config("spark.sql.ansi.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    # The Arrow closures (operators/similarity.py, functions/decode.py)
+    # call package functions, which cloudpickle ships by reference: the
+    # Python workers must import this package even when the driver found
+    # it through its own sys.path, not PYTHONPATH
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    conf[key] = os.pathsep.join(p for p in (root, conf.get(key)) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -18,7 +18,7 @@ from kafka_plugins_spark.lake import ParquetSnapshotTable
 from kafka_plugins_spark.operators.resolve import last_writer_wins
 from kafka_plugins_spark.replay import replay
 from tests.test_lake import _batch
-from tests.util import assert_tables_equal, duckdb_final_state
+from tests.util import assert_tables_equal, duckdb_final_state, spark_jobs
 
 
 def test_bucketed_replay_matches_oracle_and_other_modes(spark, events_path, tmp_path):
@@ -254,14 +254,10 @@ def test_point_lookup_schedules_no_bucket_job(spark, tmp_path):
         batch_id=0,
     )
 
-    def njobs():
-        return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
-
     _BUCKET_CACHE.clear()
-    j0 = njobs()
-    df_cold = table.read_key("k3")   # cold cache: LocalRelation fold, no job
-    df_warm = table.read_key("k3")   # warm cache: dict hit
-    assert njobs() == j0, "bucket-id computation must schedule zero Spark jobs"
+    df_cold, jobs_cold = spark_jobs(spark, lambda: table.read_key("k3"))  # LocalRelation fold
+    df_warm, jobs_warm = spark_jobs(spark, lambda: table.read_key("k3"))  # dict hit
+    assert jobs_cold == jobs_warm == 0, "bucket-id computation must schedule zero Spark jobs"
     assert ("k3", 8) in _BUCKET_CACHE
     # and the JVM-evaluated bucket matches what the writer's expression says
     assert _bucket_of(spark, "k3", 8) == _BUCKET_CACHE[("k3", 8)]
@@ -463,20 +459,15 @@ def test_buckets_of_batch_is_job_free_and_cached(spark):
     _BUCKET_CACHE.clear()
     ids = [f"conv-{i}" for i in range(50)]
 
-    def njobs():
-        return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
-
-    j0 = njobs()
-    got = _buckets_of(spark, ids, 16)
-    assert njobs() == j0, "batch bucket mapping must schedule zero Spark jobs"
+    got, jobs = spark_jobs(spark, lambda: _buckets_of(spark, ids, 16))
+    assert jobs == 0, "batch bucket mapping must schedule zero Spark jobs"
     assert set(got) == set(ids)
     for cid in ids[:5]:
         assert got[cid] == _bucket_of(spark, cid, 16)
         assert _BUCKET_CACHE[(cid, 16)] == got[cid]
     # warm path: all hits, still no job
-    j1 = njobs()
-    again = _buckets_of(spark, ids, 16)
-    assert again == got and njobs() == j1
+    again, jobs = spark_jobs(spark, lambda: _buckets_of(spark, ids, 16))
+    assert again == got and jobs == 0
 
 
 def test_bucket_cache_evicts_one_entry_not_all(spark):

@@ -153,6 +153,7 @@ def test_ops_report_schedules_zero_spark_jobs(spark, tmp_path):
     from kafka_plugins_spark.lake import ParquetSnapshotTable
     from kafka_plugins_spark.operators.resolve import last_writer_wins
     from tests.test_lake import _batch
+    from tests.util import spark_jobs
 
     table = ParquetSnapshotTable(spark, str(tmp_path / "t"))
     table.merge_into(
@@ -160,12 +161,10 @@ def test_ops_report_schedules_zero_spark_jobs(spark, tmp_path):
         batch_id=0,
     )
 
-    def njobs():
-        return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
-
-    j0 = njobs()
-    rep = ops_report(table, end_offsets={0: 5}, start_offsets={0: 0})
-    assert njobs() == j0, "ops_report must schedule zero Spark jobs"
+    rep, jobs = spark_jobs(
+        spark, lambda: ops_report(table, end_offsets={0: 5}, start_offsets={0: 0})
+    )
+    assert jobs == 0, "ops_report must schedule zero Spark jobs"
     assert rep["caught_up"] is True and rep["snapshot_id"] == 0
 
 

@@ -275,10 +275,14 @@ def test_commit_job_budget_every_mode(spark, events_path, tmp_path, mode):
 
 
 def test_point_read_job_budget_every_layout(spark, tmp_path):
-    """``read_key(...).collect()`` schedules at most one Spark job on
-    every layout; a multi-dir MoR snapshot would pay an exchange and a
-    second job if it went through read()'s resolve window."""
-    sc = spark.sparkContext
+    """``read_key(...).collect()`` on a CoW or MoR snapshot whose data
+    files fit in one scan split (``spark.sql.files.maxPartitionBytes``)
+    schedules no Spark job: the key is read in-process with pyarrow.
+    Above that bound it is one key-pushed Spark scan, one job, same rows.
+    A bucketed read stays one lazy one-bucket scan (at most one job)."""
+    from kafka_plugins_spark.lake import _data_files
+    from tests.util import spark_jobs
+
     batches = [
         _batch(spark, [(f"k{i}", "user", f"t{i}.{b}", "I", 10 * b + i) for i in range(6)])
         for b in range(3)
@@ -301,19 +305,27 @@ def test_point_read_job_budget_every_layout(spark, tmp_path):
     }
     jobs = {}
     for name, (t, sid, text) in cases.items():
-        group = f"point-read-{name}"
-        sc.setJobGroup(group, group)
-        try:
-            rows = t.read_key("k3", sid).collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
+        rows, jobs[name] = spark_jobs(spark, lambda: t.read_key("k3", sid).collect())
         assert [r["text"] for r in rows] == [text], name
-        # the status store is fed by the async listener bus: drain it so
-        # a lagging count cannot pass for a small one
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert all(n <= 1 for n in jobs.values()), jobs
+    assert jobs.pop("bucketed") <= 1, jobs
+    assert jobs == dict.fromkeys(jobs, 0), jobs
+
+    # above the bound: one Spark scan, the same rows
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    above = {}
+    try:
+        for name in ("cow", "mor 3 dirs", "mor time travel"):
+            t, sid, text = cases[name]
+            snap = t.current_snapshot() if sid is None else t.snapshot_by_id(sid)
+            size = sum(_data_files(t._snapshot_paths(snap)).values())
+            spark.conf.set(key, str(size - 1))
+            rows, above[name] = spark_jobs(spark, lambda: t.read_key("k3", sid).collect())
+            assert rows == t.read(sid).filter(F.col("conv_id") == "k3").collect(), name
+            assert [r["text"] for r in rows] == [text], name
+    finally:
+        spark.conf.set(key, old)
+    assert above == {"cow": 1, "mor 3 dirs": 1, "mor time travel": 1}, above
 
 
 def test_empty_table_reads_empty(spark, tmp_path):

@@ -8,6 +8,7 @@ CDC ingest, where CoW's per-commit rewrite is O(N·table)).
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_plugins_spark.lake import ParquetSnapshotTable
@@ -137,23 +138,36 @@ def test_expire_snapshots_gc(spark, events_path, tmp_path):
         mor.expire_snapshots(keep_last=0)
 
 
-def test_mor_read_key_equals_filtered_read_every_snapshot(spark, tmp_path):
-    """A multi-dir MoR point read resolves its key on the driver, not
-    through read()'s window; for every key and every retained snapshot it
-    must return exactly read(sid).filter(conv_id == key), schema included."""
+@pytest.mark.parametrize(
+    "mode,side",
+    [("cow", "in-process"), ("cow", "spark"), ("mor", "in-process"), ("mor", "spark")],
+    ids=["cow-in-process", "cow-spark", "mor-in-process", "mor-spark"],
+)
+def test_mor_read_key_equals_filtered_read_every_snapshot(spark, tmp_path, mode, side):
+    """A CoW or MoR point read resolves its key on the driver, not
+    through read()'s window, from rows read in-process by pyarrow when
+    the snapshot fits in one scan split and by one Spark scan above that
+    bound (``side``). For every key and every retained snapshot it must
+    return exactly read(sid).filter(conv_id == key), schema included —
+    also for a column added later (NULL in old files) and an int→long
+    promoted column whose old files store int32."""
     import datetime
 
+    import pyarrow.parquet as pq
+
+    from kafka_plugins_spark.lake import _data_files
     from kafka_plugins_spark.schema import CHANGE_EVENT
+    from tests.util import spark_jobs
 
     ts = datetime.datetime(2026, 1, 1)
 
-    def batch(rows):
+    def batch(rows, n_type="int"):
         return spark.createDataFrame(
             [(c, turn, "user", text, None, ts, op, 0, off) for c, turn, text, op, off in rows],
             CHANGE_EVENT,
-        )
+        ).withColumn("n", (F.col("offset") * (1 << 33 if n_type == "long" else 1)).cast(n_type))
 
-    table = ParquetSnapshotTable(spark, str(tmp_path / "t"), mode="mor")
+    table = ParquetSnapshotTable(spark, str(tmp_path / "t"), mode=mode)
     table.merge_into(batch([("k1", 0, "a", "I", 10), ("k1", 1, "b", "I", 11),
                             ("k2", 0, "c", "I", 12), ("k3", 0, "d", "I", 13)]), batch_id=0)
     table.merge_into(batch([("k1", 0, "stale", "U", 5),  # later delta, lower offset: loses
@@ -161,20 +175,38 @@ def test_mor_read_key_equals_filtered_read_every_snapshot(spark, tmp_path):
                             ("k4", 0, "e", "I", 15)]), batch_id=1)
     table.merge_into(batch([("k2", 0, "c2", "I", 16),  # re-insert after the tombstone
                             ("k3", 0, None, "D", 17)]), batch_id=2)
-    table.merge_into(  # a column added in the last delta
-        batch([("k1", 1, "b2", "U", 18)]).withColumn("model", F.lit("m-1")), batch_id=3
+    table.merge_into(  # a column added and ``n`` promoted to long in the last commit
+        batch([("k1", 1, "b2", "U", 18)], "long").withColumn("model", F.lit("m-1")), batch_id=3
     )
-    assert len(table.current_snapshot()["data_paths"]) == 4
+    paths = table._snapshot_paths(table.current_snapshot())
+    assert len(paths) == (4 if mode == "mor" else 1)
+    types = {f.name: f.dataType.simpleString() for f in table.table_schema().fields}
+    assert (types["n"], types["model"]) == ("bigint", "string")
+    if mode == "mor":  # the first delta's files still store n as int32
+        assert {str(pq.read_schema(f).field("n").type) for f in _data_files(paths[:1])} == {"int32"}
 
-    got = {(r["conv_id"], r["turn_idx"]): (r["text"], r["model"])
+    got = {(r["conv_id"], r["turn_idx"]): (r["text"], r["n"], r["model"])
            for r in table.read_key("k1").collect() + table.read_key("k2").collect()}
-    assert got == {("k1", 0): ("a", None), ("k1", 1): ("b2", "m-1"), ("k2", 0): ("c2", None)}
+    assert got == {("k1", 0): ("a", 10, None), ("k1", 1): ("b2", 18 << 33, "m-1"),
+                   ("k2", 0): ("c2", 16, None)}
     assert table.read_key("k3").collect() == []
 
-    for sid in [s["snapshot_id"] for s in table.snapshots()]:
-        full = table.read(sid)
-        for key in ("k1", "k2", "k3", "k4", "absent"):
-            df = table.read_key(key, sid)
-            assert df.schema == full.schema, (sid, key)
-            want = full.filter(F.col("conv_id") == key).collect()
-            assert sorted(df.collect()) == sorted(want), (sid, key)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        for sid in [s["snapshot_id"] for s in table.snapshots()]:
+            full = table.read(sid)
+            if side == "spark":
+                size = sum(_data_files(table._snapshot_paths(table.snapshot_by_id(sid))).values())
+                spark.conf.set(key, str(size - 1))
+            for k in ("k1", "k2", "k3", "k4", "absent"):
+                df = table.read_key(k, sid)
+                assert df.schema == full.schema, (sid, k)
+                rows, jobs = spark_jobs(spark, df.collect)
+                assert jobs == 0, (sid, k)  # the result is a local frame
+                want = full.filter(F.col("conv_id") == k).collect()
+                assert sorted(rows) == sorted(want), (sid, k)
+            _, jobs = spark_jobs(spark, lambda: table.read_key("k1", sid))
+            assert jobs == (1 if side == "spark" else 0), sid
+    finally:
+        spark.conf.set(key, old)

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from kafka_plugins_spark.lake import ParquetSnapshotTable
 from kafka_plugins_spark.operators.resolve import last_writer_wins
 from tests.test_lake import _batch
+from tests.util import spark_jobs
 
 
 def _table(spark, path, mode=None, **kw):
@@ -265,17 +266,9 @@ def test_purge_cow_is_single_scan_single_job(spark, tmp_path):
     map-side (a separate count() would double-read the table; review
     finding)."""
     table = _table(spark, str(tmp_path / "t"))
-
-    def njobs():
-        # the AppStatusStore is fed by the async listener bus — drain it
-        # before sampling or the count lags actual job starts (flaky)
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
-
-    j0 = njobs()
-    res = table.purge_keys(["purgeme"])
+    res, jobs = spark_jobs(spark, lambda: table.purge_keys(["purgeme"]))
     assert not res["skipped"] and res["rows_purged"] == 1
-    assert njobs() - j0 == 1, "CoW purge must be one job (write + observation)"
+    assert jobs == 1, "CoW purge must be one job (write + observation)"
 
 
 @pytest.mark.parametrize("seed", [7, 23])

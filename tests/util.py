@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 import duckdb
 import pandas as pd
 
@@ -53,3 +55,21 @@ def assert_tables_equal(actual: pd.DataFrame, expected: pd.DataFrame) -> None:
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
     cols = [c for c in cols if c in a.columns and c in e.columns]
     pd.testing.assert_frame_equal(a[cols], e[cols], check_dtype=False)
+
+
+def spark_jobs(spark, fn):
+    """``(fn(), number of Spark jobs it scheduled)``. Counted by a fresh
+    job group after draining the async listener bus: the status store
+    keeps only ``spark.ui.retainedJobs`` jobs, so comparing its total size
+    before and after stops seeing new jobs once that cap is reached, while
+    the newest jobs of a group are always retained."""
+    sc = spark.sparkContext
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        res = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return res, len(sc.statusTracker().getJobIdsForGroup(group))
